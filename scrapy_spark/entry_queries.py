@@ -55,7 +55,6 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
-
 def _path_bytes(path: str) -> int:
     import os
 
@@ -818,46 +817,6 @@ def dedup_ngram_jaccard(spark, sf_dir):
 
 
 @_q(
-    "dedup_ngram_containment",
-    f"""
-    WITH shingles0 AS ({_SHINGLES_SQL}),
-    shingles AS (
-      SELECT s.doc_id, s.shingle FROM shingles0 s
-      JOIN (SELECT shingle FROM shingles0 GROUP BY shingle
-            HAVING count(*) <= 1000) ok USING (shingle)
-    ),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-      FROM shingles a JOIN shingles b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT p.doc_a, p.doc_b,
-           round(p.common / CAST(sa.sz AS DOUBLE), 6) AS containment_ab,
-           round(p.common / CAST(sb.sz AS DOUBLE), 6) AS containment_ba
-    FROM pairs p JOIN sizes sa ON sa.doc_id = p.doc_a
-                 JOIN sizes sb ON sb.doc_id = p.doc_b
-    WHERE p.common / CAST(sa.sz AS DOUBLE) >= 0.9
-       OR p.common / CAST(sb.sz AS DOUBLE) >= 0.9
-    """,
-)
-def dedup_ngram_containment(spark, sf_dir):
-    """Asymmetric containment near-dup (C(A in B) = |A∩B|/|A| over capped
-    3-gram shingle sets) — the direction Jaccard misses: a short doc
-    quoted wholesale inside a long one scores containment ~1.0 but low
-    Jaccard, and the training pipeline drops the contained copy. Same
-    inverted-index shapes and posting-list cap as dedup_ngram_jaccard
-    (operators/neardup.ngram_containment_pairs)."""
-    from scrapy_spark.operators.neardup import ngram_containment_pairs
-
-    return ngram_containment_pairs(
-        _spark_shingles(spark, sf_dir), threshold=0.9, max_doc_freq=1000,
-        materialize=True,
-    )
-
-
-@_q(
     "dedup_minhash_lsh",
     f"""
     WITH shingles AS ({_SHINGLES_SQL}),
@@ -1105,7 +1064,7 @@ def dedup_simhash_pairs(spark, sf_dir):
     web-dedup shape): 64-bit signatures from per-token md5 bit majorities,
     paired through the SHARED banded-hamming kernel
     (operators/imageops.banded_hamming_pairs — the same implementation
-    that serves image phash / video frames / audio fingerprints) at
+    that serves image phash near-dups) at
     4 x 16-bit bands, exact bit_count verify, hamming <= 3 < n_bands so
     recall is pigeonhole-complete.
 
@@ -1214,14 +1173,16 @@ _QUANT_SQL = """
 # codebook update keeps its sub_dim=8 fast path (measured ~0.9s faster).
 def _spark_quantized(spark, sf_dir):
     """Embeddings quantized to integer milli-units: dot products become exact
-    bigint arithmetic — order-independent, engine-portable."""
+    bigint arithmetic — order-independent, engine-portable. The multiply
+    stays in float32 as in _QUANT_SQL (DuckDB's float * int is float):
+    Spark's ``x * 1000`` widens to double first, which rounds float32 .5
+    boundaries the other way (-0.0525f -> -52 instead of -53)."""
     e = load(spark, sf_dir, "embeddings")
+    k = F.lit(1000).cast("float")
     return e.select(
         "vec_id",
         "label",
-        F.transform(
-            "embedding", lambda x: F.round(x * 1000).cast("long")
-        ).alias("q"),
+        F.transform("embedding", lambda x: F.round(x * k).cast("long")).alias("q"),
     )
 
 
@@ -1447,8 +1408,8 @@ def dedup_keep_best(spark, sf_dir):
 )
 def corpus_stats(spark, sf_dir):
     """One-row corpus sizing summary — the "how big is my training set"
-    readout next to hygiene_funnel's drop counts: doc/token/char totals,
-    language count, and EXACT p50/p95 document token lengths.
+    readout: doc/token/char totals, language count, and EXACT p50/p95
+    document token lengths.
 
     Scale shape for exact global quantiles: sort the HISTOGRAM, never the
     rows — token counts aggregate to (length, freq) pairs first, and the
@@ -1574,25 +1535,10 @@ _EDGES_SQL = """
 """
 
 
-def _copurchase_edges(spark, sf_dir):
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    # distinct on the (int, int) key pair BEFORE building node-id strings:
-    # the dedup shuffle moves 16-byte rows instead of two concat'd strings
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select("o_custkey", "l_partkey")
-        .distinct()
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-        )
-    )
-
-
 def _copurchase_edges_long(spark, sf_dir):
-    """The same bipartite co-purchase edge set with nodes encoded as LONGS
-    (customer c -> 2c, part p -> 2p+1) instead of 'c{c}'/'p{p}' strings.
+    """The bipartite co-purchase edge set (_EDGES_SQL) with nodes encoded
+    as LONGS (customer c -> 2c, part p -> 2p+1) instead of 'c{c}'/'p{p}'
+    strings.
 
     PageRank/HITS recurrences are label-oblivious (pure sums/joins on the
     node key, no label-dependent tie-break anywhere), so running the
@@ -1618,7 +1564,7 @@ def _copurchase_edges_long(spark, sf_dir):
 def _node_str(col: str = "node"):
     """Map a long-encoded co-purchase node id back to its canonical string
     ('c{custkey}' for even ids, 'p{partkey}' for odd) — the exact strings
-    _copurchase_edges and the DuckDB oracles emit."""
+    the DuckDB oracles emit."""
     return F.expr(
         f"CASE WHEN {col} % 2 = 0"
         f" THEN concat('c', CAST({col} div 2 AS STRING))"
@@ -1716,9 +1662,8 @@ def pagerank_copurchase(spark, sf_dir):
     the customer→part bipartite graph, 5 fixed iterations as DataFrame joins.
 
     Uses the FIXED-POINT variant (linkgraph.pagerank_exact): all-integer
-    recurrence, hash-exact against the unrolled DuckDB CTE oracle. The float
-    twin (linkgraph.pagerank) is verified against numpy in
-    tests/test_linkgraph.py.
+    recurrence, hash-exact against the unrolled DuckDB CTE oracle, and
+    tracked against a float numpy reference in tests/test_linkgraph.py.
 
     The loop runs on LONG-encoded nodes (label-oblivious recurrence, see
     _copurchase_edges_long) and maps back to the canonical node strings at
@@ -2243,84 +2188,6 @@ def pack_sequences(spark, sf_dir):
     )
 
 
-@_q(
-    "hygiene_funnel",
-    f"""
-    SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(c.is_eval) AS BIGINT) AS n_eval,
-           CAST(sum(c.is_contaminated) AS BIGINT) AS n_contaminated,
-           CAST(sum(CASE WHEN b.boiler_frac >= 0.5 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_boiler_heavy,
-           CAST(sum(CASE WHEN coalesce(q.quality, 0.0) < 0.3 THEN 1 ELSE 0
-                    END) AS BIGINT) AS n_low_quality,
-           CAST(sum(CASE WHEN p.n_pii > 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_pii_docs,
-           CAST(sum(m.is_selected) AS BIGINT) AS n_sampled,
-           CAST(sum(CASE WHEN m.is_selected = 1 AND c.is_eval = 0
-                          AND c.is_contaminated = 0 AND b.boiler_frac < 0.5
-                          AND coalesce(q.quality, 0.0) >= 0.3 AND p.n_pii = 0
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_train_ready
-    FROM (SELECT doc_id FROM documents) d
-    JOIN {_sub("text_decontaminate")} c USING (doc_id)
-    JOIN {_sub("text_boilerplate")} b USING (doc_id)
-    LEFT JOIN {_sub("text_quality_score")} q USING (doc_id)
-    JOIN {_sub("text_pii")} p USING (doc_id)
-    JOIN {_sub("sample_mixture")} m USING (doc_id)
-    """,
-)
-def hygiene_funnel(spark, sf_dir):
-    """Corpus-level hygiene funnel: the one-row summary a pipeline operator
-    reads before a training run — how many docs each filter would drop
-    (eval split, contamination, boilerplate-heavy, low quality, PII) and
-    how many survive everything AND the mixture sample (n_train_ready).
-    Composition of the per-doc members at the documents grain — the ONE
-    member that is not all-docs (text_quality_score filters n_tokens > 0)
-    joins LEFT with quality coalesced to 0.0, so a zero-token doc counts
-    in n_docs AND lands in n_low_quality (the lowest quality conceivable)
-    instead of silently vanishing. The thresholds compare member-rounded
-    doubles, identical in both engines."""
-    d = load(spark, sf_dir, "documents").select("doc_id")
-    c = QUERIES["text_decontaminate"][0](spark, sf_dir).select(
-        "doc_id", "is_eval", "is_contaminated"
-    )
-    b = QUERIES["text_boilerplate"][0](spark, sf_dir).select(
-        "doc_id", "boiler_frac"
-    )
-    q = QUERIES["text_quality_score"][0](spark, sf_dir).select(
-        "doc_id", "quality"
-    )
-    p = QUERIES["text_pii"][0](spark, sf_dir).select("doc_id", "n_pii")
-    m = QUERIES["sample_mixture"][0](spark, sf_dir).select(
-        "doc_id", "is_selected"
-    )
-
-    def flag(cond):
-        return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
-
-    qual = F.coalesce(F.col("quality"), F.lit(0.0))
-    return (
-        d.join(c, "doc_id").join(b, "doc_id").join(q, "doc_id", "left")
-        .join(p, "doc_id").join(m, "doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("is_eval").cast("long").alias("n_eval"),
-            F.sum("is_contaminated").cast("long").alias("n_contaminated"),
-            flag(F.col("boiler_frac") >= 0.5).alias("n_boiler_heavy"),
-            flag(qual < 0.3).alias("n_low_quality"),
-            flag(F.col("n_pii") > 0).alias("n_pii_docs"),
-            F.sum("is_selected").cast("long").alias("n_sampled"),
-            flag(
-                (F.col("is_selected") == 1)
-                & (F.col("is_eval") == 0)
-                & (F.col("is_contaminated") == 0)
-                & (F.col("boiler_frac") < 0.5)
-                & (qual >= 0.3)
-                & (F.col("n_pii") == 0)
-            ).alias("n_train_ready"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Second wave: remaining SURVEY §2 operator families
 # ---------------------------------------------------------------------------
@@ -2616,8 +2483,8 @@ def hits_copurchase(spark, sf_dir):
 
     Uses the FIXED-POINT variant (linkgraph.hits_exact): scores re-quantize
     to integer millis after each L2 normalization so every sum is exact and
-    the unrolled DuckDB CTE oracle hash-matches. The float twin
-    (linkgraph.hits) is verified against numpy in tests/test_linkgraph.py.
+    the unrolled DuckDB CTE oracle hash-matches; tracked against a float
+    numpy reference in tests/test_linkgraph.py.
 
     Long-encoded node loop + output mapping, as in pagerank_copurchase."""
     from .operators.linkgraph import hits_exact
@@ -2818,7 +2685,6 @@ def _ivf_parts(n_clusters: int, iters: int, n_probe: int = 1) -> list[str]:
         " ON a.cid = b.cid AND b.vec_id <> a.vec_id)"
     )
     return parts
-
 
 
 def _ann_topk_tail_sql(parts: list[str], k: int) -> str:
@@ -3662,11 +3528,11 @@ def a14_perf_trends(spark, sf_dir):
 def pdf_meta(spark, sf_dir):
     """PDF handling as a driver-checked roundtrip: build a REAL PDF per doc
     (functions/pdffn.encode_pdf — 40-word pages, title, doc_id%3 link
-    annotations), then recover metadata through the PDF operator path
-    (operators/pdfops semantics). The oracle computes the same invariants
-    directly from the text, so the hash check proves encode->decode is
-    lossless for every field. The crawl-side PDF fetch (pdf_link candidates,
-    content_handlers.py:20-160) is parity-tested in test_crawl_parity."""
+    annotations), then recover metadata through the pdffn decoders. The
+    oracle computes the same invariants directly from the text, so the
+    hash check proves encode->decode is lossless for every field. The
+    crawl-side PDF fetch (pdf_link candidates, content_handlers.py:20-160)
+    is parity-tested in test_crawl_parity."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -3694,7 +3560,7 @@ def pdf_meta(spark, sf_dir):
                     pages, title=f"doc {row.doc_id}", author="corpus",
                     link_uris=links,
                 )
-                # decode side — the operator path's field extraction
+                # decode side — field extraction from the PDF bytes
                 texts = pdffn.pdf_page_texts(data)
                 out.append(
                     {
@@ -4376,87 +4242,6 @@ def adaptive_request_config(spark, sf_dir):
     )
 
 
-@_q(
-    "stage_metrics",
-    """
-    WITH r AS (
-      SELECT event_type AS stage,
-             CAST(round(value * 1000000) AS BIGINT) AS rt,
-             epoch_us(ts) AS us, event_id,
-             CASE WHEN value >= 0.5 THEN 1 ELSE 0 END AS ok
-      FROM events
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY stage ORDER BY rt, event_id)
-                  AS rk,
-             count(*) OVER (PARTITION BY stage) AS n
-      FROM r
-    )
-    SELECT stage,
-           CAST(max(n) AS BIGINT) AS items_processed,
-           CAST(sum(ok) AS BIGINT) AS items_succeeded,
-           CAST(max(n) - sum(ok) AS BIGINT) AS items_failed,
-           round(sum(ok) / CAST(max(n) AS DOUBLE) * 100, 6) AS success_rate,
-           CAST(max(us) - min(us) AS BIGINT) AS duration_micros,
-           CAST((max(n) * 1000000000) // NULLIF(max(us) - min(us), 0)
-             AS BIGINT) AS throughput_milli,
-           max(CASE WHEN rk = (50 * n + 99) // 100 THEN rt END) AS p50_micros,
-           max(CASE WHEN rk = (95 * n + 99) // 100 THEN rt END) AS p95_micros,
-           max(CASE WHEN rk = (99 * n + 99) // 100 THEN rt END) AS p99_micros
-    FROM ranked GROUP BY stage
-    """,
-)
-def stage_metrics(spark, sf_dir):
-    """Per-stage metrics rollup (enhanced_metrics.py:35-234 Stage1/2/3Metrics:
-    items processed/succeeded/failed, success_rate, duration, throughput,
-    response-time percentiles — the properties the reference computes on
-    driver-side dataclasses, here as ONE aggregation). Events as the stage
-    log: stage = event_type, success = the deterministic value>=0.5 bit,
-    duration = the stage's observed time span; exact discrete percentiles
-    with the (rt, event_id) tie-break and integer index pick — same
-    technique as domain_latency_percentiles. Throughput kept integer
-    (milli-items/sec over the micros span) so the twins hash-match.
-
-    The live-crawl projection of the same shape is the catalog's metrics
-    table + Prometheus export (sources/metrics_export.py)."""
-    e = load(spark, sf_dir, "events")
-    r = e.select(
-        F.col("event_type").alias("stage"),
-        _micros(F.col("value")).alias("rt"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-        "event_id",
-        F.when(F.col("value") >= 0.5, 1).otherwise(0).alias("ok"),
-    )
-    w = Window.partitionBy("stage").orderBy("rt", "event_id")
-    ranked = r.withColumn("rk", F.row_number().over(w)).withColumn(
-        "n", F.count("*").over(Window.partitionBy("stage"))
-    )
-
-    def _pick(p):
-        return F.max(
-            F.when(F.col("rk") == F.expr(f"({p} * n + 99) div 100"), F.col("rt"))
-        )
-
-    n = F.max("n")
-    ok = F.sum("ok")
-    span = F.max("us") - F.min("us")
-    return ranked.groupBy("stage").agg(
-        n.cast("long").alias("items_processed"),
-        ok.cast("long").alias("items_succeeded"),
-        (n - ok).cast("long").alias("items_failed"),
-        F.round(ok / n.cast("double") * 100, 6).alias("success_rate"),
-        span.cast("long").alias("duration_micros"),
-        # NULLIF: a degenerate one-timestamp stage yields NULL in BOTH
-        # twins (DuckDB // raises on a bare zero divisor; Spark div does not)
-        F.expr("(max(n) * 1000000000) div nullif(max(us) - min(us), 0)")
-        .cast("long")
-        .alias("throughput_milli"),
-        _pick(50).alias("p50_micros"),
-        _pick(95).alias("p95_micros"),
-        _pick(99).alias("p99_micros"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Driver-registry combos + the 50-entry driver list.
 #
@@ -4741,102 +4526,6 @@ def nlp_text_stats(spark, sf_dir):
     return r.select("doc_id", *cols.values())
 
 
-_QA_QUESTION = "What is the main topic of the document?"
-_QA_ANSWER = (
-    "This is a placeholder answer. The main topic is not yet determined."
-)
-
-
-@_q(
-    "qa_generation",
-    f"""
-    SELECT doc_id,
-           CAST(CASE WHEN length(text) > 0 THEN 1 ELSE 0 END AS BIGINT) AS n_qa,
-           CASE WHEN length(text) > 0 THEN '{_QA_QUESTION}' END AS question,
-           CASE WHEN length(text) > 0 THEN '{_QA_ANSWER}' END AS answer
-    FROM documents
-    """,
-)
-def qa_generation(spark, sf_dir):
-    """QA-pair generation twin (qa_generation.py:26-31 generate_qa_pairs):
-    the reference module is itself an explicit placeholder — non-empty text
-    yields exactly ONE fixed question/answer pair, empty/invalid text
-    yields none. Reproduced verbatim (same strings, same emptiness gate) so
-    a reference user's stage-3 QA hook runs unchanged; a real generator
-    slots into the same all-docs-grain projection. Pure column
-    expressions — the model-call seam would be an Arrow-batched pandas UDF
-    in the same position."""
-    d = load(spark, sf_dir, "documents")
-    has = F.length("text") > 0
-    return d.select(
-        "doc_id",
-        F.when(has, F.lit(1)).otherwise(F.lit(0)).cast("long").alias("n_qa"),
-        F.when(has, F.lit(_QA_QUESTION)).alias("question"),
-        F.when(has, F.lit(_QA_ANSWER)).alias("answer"),
-    )
-
-
-def _nlp_keywords_sql() -> str:
-    from scrapy_spark.functions import nlpfn
-
-    return f"""
-    {_nlp_rows_cte()},
-    cand AS ({nlpfn.sql_keyword_candidates('t', 'doc_id', 'rows')})
-    SELECT doc_id, rank, keyword, n FROM (
-      SELECT doc_id, keyword, n,
-             CAST(row_number() OVER (PARTITION BY doc_id
-                                     ORDER BY n DESC, first_pos ASC)
-                  AS BIGINT) AS rank
-      FROM cand
-    ) WHERE rank <= {nlpfn.TOP_KEYWORDS}
-    """
-
-
-@_q("nlp_keywords_simple", _nlp_keywords_sql())
-def nlp_keywords_simple(spark, sf_dir):
-    """extract_keywords_simple (nlp.py:609-624): top-15 frequency keywords
-    per document with Counter.most_common's EXACT tie order (count desc,
-    first occurrence asc — most_common is a stable sort over insertion
-    order). Per-document window only (bounded by a doc's distinct words —
-    never a global sort)."""
-    from scrapy_spark.functions import nlpfn
-
-    d = load(spark, sf_dir, "documents")
-    r = d.select("doc_id", _nlp_text_spark(d).alias("t"))
-    cand = nlpfn.keyword_candidates(r, F.col("t"), "doc_id")
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("n").desc(), F.col("first_pos").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= nlpfn.TOP_KEYWORDS)
-        .select("doc_id", "rank", "keyword", "n")
-    )
-
-
-def _nlp_entities_sql() -> str:
-    from scrapy_spark.functions import nlpfn
-
-    return f"""
-    {_nlp_rows_cte()}
-    {nlpfn.sql_entity_rows('t', 'doc_id', 'rows')}
-    """
-
-
-@_q("nlp_entities", _nlp_entities_sql())
-def nlp_entities(spark, sf_dir):
-    """Entity spans: capitalized-run candidates (the model-free stand-in
-    for the reference's spaCy NER, nlp.py:294-313) filtered with the
-    reference's filter_entities semantics verbatim (nlp.py:558-606 —
-    <=6 words by construction, case-insensitive dedup keeping the first
-    occurrence, first-occurrence output order)."""
-    from scrapy_spark.functions import nlpfn
-
-    d = load(spark, sf_dir, "documents")
-    r = d.select("doc_id", _nlp_text_spark(d).alias("t"))
-    return nlpfn.entity_rows(r, F.col("t"), "doc_id")
-
-
 # Hashed-feature linear classifier (the "hashing trick", Weinberger et al.
 # 2009; the shape of fastText/CCNet-style quality filters): token -> rolling
 # polynomial hash -> bucket -> fixed integer weight; doc score = sum of
@@ -4921,50 +4610,6 @@ def text_hashed_classifier(spark, sf_dir):
         F.size(toks).cast("long").alias("n_feats"),
         score.alias("cls_score"),
         F.when(score >= 0, F.lit("keep")).otherwise(F.lit("drop")).alias("cls_label"),
-    )
-
-
-@_q(
-    "classifier_calibration",
-    f"""
-    WITH c AS MATERIALIZED (
-      SELECT doc_id, cls_label FROM {_sub("text_hashed_classifier")}
-    ),
-    q AS MATERIALIZED (
-      SELECT doc_id, CAST(round(quality * 1000000) AS BIGINT) AS qm
-      FROM {_sub("text_quality_score")}
-    )
-    SELECT c.cls_label,
-           CAST(least(3, q.qm // 250000) AS BIGINT) AS q_band,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(q.qm) AS BIGINT) AS sum_qm
-    FROM c JOIN q USING (doc_id)
-    GROUP BY 1, 2
-    """,
-)
-def classifier_calibration(spark, sf_dir):
-    """Model-evaluation readout for the hashed classifier: cross-tab of its
-    keep/drop label against heuristic-quality quartile bands — the
-    calibration table an operator checks before trusting a filter model at
-    corpus scale (a keep-heavy low-quality band means the weight table
-    needs retraining). Bands are exact integer arithmetic on quality
-    micros (qm // 250000 capped at 3 — DuckDB // == Spark floor for
-    non-negative ints); grain is (label, band), bounded at 2 x 4 rows.
-    One doc_id equi-join + one tiny hash aggregate."""
-    c = QUERIES["text_hashed_classifier"][0](spark, sf_dir).select(
-        "doc_id", "cls_label"
-    )
-    q = QUERIES["text_quality_score"][0](spark, sf_dir).select(
-        "doc_id", _micros(F.col("quality")).alias("qm")
-    )
-    band = F.least(F.lit(3), F.floor(F.col("qm") / 250000)).cast("long")
-    return (
-        c.join(q, "doc_id")
-        .groupBy("cls_label", band.alias("q_band"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("qm").cast("long").alias("sum_qm"),
-        )
     )
 
 
@@ -6112,72 +5757,6 @@ DRIVER_QUERY_NAMES: list[str] = [
 # NOTE: "domain_health" = combo(domain_latency_percentiles ⋈ request_patterns)
 # on the shared domain grain — defined at the bottom of this module, so the
 # registry-closure asserts run at the very end of the file (after every @_q).
-
-
-def _page_importance_sql() -> str:
-    """pagerank ⋈ hits ⋈ degrees on node + degree centrality — the
-    reference's importance_scores row (link_graph.py:315-365)."""
-    return f"""
-    WITH pr AS ({QUERIES["pagerank_copurchase"][1]}),
-    ha AS ({QUERIES["hits_copurchase"][1]}),
-    deg AS ({QUERIES["a8_degree_stats"][1]}),
-    nn AS (SELECT count(*) AS n FROM deg)
-    SELECT pr.node, pr.rank AS pagerank_score,
-           ha.hub AS hub_score, ha.authority AS authority_score,
-           CAST(deg.in_degree AS BIGINT) AS inlink_count,
-           CAST(deg.out_degree AS BIGINT) AS outlink_count,
-           round((deg.in_degree + deg.out_degree)
-                 / (2.0 * (nn.n - 1)), 6) AS degree_centrality
-    FROM pr JOIN ha USING (node) JOIN deg ON deg.node = pr.node
-    CROSS JOIN nn
-    """
-
-
-@_q("page_importance", _page_importance_sql())
-def page_importance(spark, sf_dir):
-    """Per-page importance view (link_graph.py:315-365 get_page_importance /
-    importance_scores): fixed-point PageRank ⋈ HITS hub/authority ⋈ in/out
-    degrees, plus degree centrality (in+out)/(2(n-1)) — one joined result
-    per node, the reference's importance_scores table as a DataFrame.
-    Local-sweep query (driver list is capped at 50; members are all
-    driver-verified). Long-encoded node ids through the loops AND the
-    joins (joins on 8-byte keys); the canonical node string is produced
-    once at output — an injective map, so join results are unchanged."""
-    edges = _cut(_copurchase_edges_long(spark, sf_dir), name="q-edges")
-    from scrapy_spark.operators.linkgraph import (
-        degree_stats,
-        hits_exact,
-        pagerank_exact,
-    )
-
-    pr = pagerank_exact(edges, iterations=5, materialize=False).select(
-        "node", F.col("rank").alias("pagerank_score")
-    )
-    ha = hits_exact(edges, iterations=5, materialize=False).select(
-        "node", F.col("hub").alias("hub_score"),
-        F.col("authority").alias("authority_score"),
-    )
-    deg = degree_stats(edges, materialize=False).select(
-        "node",
-        F.col("in_degree").cast("long").alias("inlink_count"),
-        F.col("out_degree").cast("long").alias("outlink_count"),
-    )
-    n = deg.agg(F.count("*").alias("n"))
-    return (
-        pr.join(ha, "node")
-        .join(deg, "node")
-        .crossJoin(F.broadcast(n))
-        .select(
-            _node_str().alias("node"),
-            "pagerank_score", "hub_score", "authority_score",
-            "inlink_count", "outlink_count",
-            F.round(
-                (F.col("inlink_count") + F.col("outlink_count"))
-                / (2.0 * (F.col("n") - 1)),
-                6,
-            ).alias("degree_centrality"),
-        )
-    )
 
 
 @_q(

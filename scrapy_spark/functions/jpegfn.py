@@ -256,10 +256,6 @@ class _BitReader:
         raise ValueError("invalid Huffman code in JPEG scan")
 
 
-def _magnitude_category(v: int) -> int:
-    return 0 if v == 0 else int(abs(v)).bit_length()
-
-
 def _encode_magnitude(v: int, ssss: int) -> int:
     return v if v >= 0 else v + (1 << ssss) - 1
 

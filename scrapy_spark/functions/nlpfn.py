@@ -1,30 +1,13 @@
-"""Model-free NLP enrichment: text stats, frequency keywords, entity spans.
+"""Model-free NLP enrichment: text stats.
 
-Grafts the reference's NO-MODEL NLP surfaces exactly — the parts of
-``Scraping_project/src/common/nlp.py`` that need no spaCy/transformer:
+Grafts the reference's NO-MODEL ``get_text_stats``
+(``Scraping_project/src/common/nlp.py:626-651``): word count over
+``[A-Za-z']+``, char count, sentence count (non-blank ``[.!?]+``
+segments), average word length (emitted here as exact integer millis so
+the DuckDB driver hash matches — CLAUDE.md quantization rule).
 
-- ``get_text_stats`` (nlp.py:626-651): word count over ``[A-Za-z']+``,
-  char count, sentence count (non-blank ``[.!?]+`` segments), average
-  word length (emitted here as exact integer millis so the DuckDB driver
-  hash matches — CLAUDE.md quantization rule).
-- ``extract_keywords_simple`` (nlp.py:609-624): tokens
-  ``[a-zA-Z']{3,}`` on lowered text, stop-word filter, top-k by
-  frequency. ``Counter.most_common`` breaks ties by INSERTION order =
-  first occurrence of the word, reproduced cross-engine as the
-  deterministic (count DESC, first_position ASC) sort — bit-exact vs the
-  reference, not an approximation.
-- ``filter_entities`` (nlp.py:558-606): <= 6 words, must contain a
-  letter, not digits/punctuation only, whitespace-normalized,
-  case-insensitive dedup keeping the FIRST occurrence. The candidate
-  GENERATION is model-bound in the reference (spaCy NER / transformer,
-  nlp.py:294-343); the model-free stand-in here mines capitalized-word
-  runs (1-6 words) — the classic no-model NER heuristic — and then
-  applies the reference's filter semantics verbatim.
-
-Everything is JVM column expressions (regexp_extract_all + arrays +
-windows) with generated DuckDB twins; stop words are a fixed explicit
-list (the reference's effective set is spaCy-model-dependent,
-nlp.py:132-141 — a config surface, not a semantic one).
+Everything is JVM column expressions (regexp_extract_all + arrays) with a
+generated DuckDB twin.
 """
 
 from __future__ import annotations
@@ -32,23 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# fixed stop-word list (reference merges spaCy defaults + custom set —
-# model-dependent; this explicit list is the engine-portable equivalent)
-STOP_WORDS = [
-    "the", "and", "for", "with", "that", "this", "from", "are", "was",
-    "have", "has", "not", "you", "but", "his", "her", "its", "they",
-    "been", "were", "will", "each", "can", "their", "which", "what",
-    "all", "per", "about", "into", "than", "then", "them", "these",
-]
-
-TOP_KEYWORDS = 15  # nlp.py:12
-
 _WORD_RE = r"[A-Za-z']+"
-_KEYWORD_RE = r"[a-z']{3,}"  # applied to lower(text) == reference's [a-zA-Z']{3,}
 _SENT_SPLIT_RE = r"[.!?]+"
-# capitalized-word runs of 1-6 words: the <=6-word cap of filter_entities
-# (nlp.py:587-589) is enforced by construction
-_ENTITY_RE = r"[A-Z][a-zA-Z']*(?: [A-Z][a-zA-Z']*){0,5}"
 
 
 # --- text stats (get_text_stats, nlp.py:626-651) ---------------------------
@@ -92,77 +60,3 @@ def sql_text_stats_select(text: str) -> str:
            CAST(CASE WHEN len({toks}) > 0
                 THEN floor({total} * 1000 / CAST(len({toks}) AS DOUBLE))
                 ELSE 0 END AS BIGINT) AS avg_word_len_milli"""
-
-
-# --- simple keywords (extract_keywords_simple, nlp.py:609-624) -------------
-
-
-def keyword_candidates(df, text: Column, id_col: str):
-    """(id, keyword, n, first_pos) — one row per distinct non-stop word."""
-    toks = F.regexp_extract_all(F.lower(text), F.lit(_KEYWORD_RE), 0)
-    ex = df.select(id_col, F.posexplode(toks).alias("pos", "keyword"))
-    ex = ex.filter(~F.col("keyword").isin(STOP_WORDS))
-    return ex.groupBy(id_col, "keyword").agg(
-        F.count("*").alias("n"), F.min("pos").alias("first_pos")
-    )
-
-
-def sql_keyword_candidates(text: str, id_col: str, table: str) -> str:
-    stop = ", ".join(f"'{w}'" for w in STOP_WORDS)
-    kw_re = _KEYWORD_RE.replace("'", "''")
-    return f"""
-      SELECT {id_col}, keyword,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(min(pos) AS BIGINT) AS first_pos
-      FROM (
-        SELECT {id_col},
-               unnest(regexp_extract_all(lower({text}), '{kw_re}')) AS keyword,
-               generate_subscripts(regexp_extract_all(lower({text}), '{kw_re}'), 1) - 1
-                 AS pos
-        FROM {table}
-      )
-      WHERE keyword NOT IN ({stop})
-      GROUP BY {id_col}, keyword
-    """
-
-
-# --- entity spans (candidates + filter_entities, nlp.py:558-606) -----------
-
-
-def entity_rows(df, text: Column, id_col: str):
-    """(id, rank, entity): capitalized-run candidates, case-insensitive
-    dedup keeping the first occurrence, ordered by first occurrence."""
-    from pyspark.sql import Window
-
-    cands = F.regexp_extract_all(text, F.lit(_ENTITY_RE), 0)
-    ex = df.select(id_col, F.posexplode(cands).alias("pos", "entity"))
-    dedup = ex.groupBy(id_col, F.lower(F.col("entity")).alias("_k")).agg(
-        F.min("pos").alias("first_pos"),
-        F.min_by("entity", F.col("pos")).alias("entity"),
-    )
-    w = Window.partitionBy(id_col).orderBy("first_pos")
-    return dedup.select(
-        id_col,
-        F.row_number().over(w).cast("long").alias("rank"),
-        "entity",
-    )
-
-
-def sql_entity_rows(text: str, id_col: str, table: str) -> str:
-    ent_re = _ENTITY_RE.replace("'", "''")
-    return f"""
-      SELECT {id_col},
-             CAST(row_number() OVER (PARTITION BY {id_col} ORDER BY first_pos)
-                  AS BIGINT) AS rank,
-             entity
-      FROM (
-        SELECT {id_col}, min(pos) AS first_pos, arg_min(entity, pos) AS entity
-        FROM (
-          SELECT {id_col},
-                 unnest(regexp_extract_all({text}, '{ent_re}')) AS entity,
-                 generate_subscripts(regexp_extract_all({text}, '{ent_re}'), 1) AS pos
-          FROM {table}
-        )
-        GROUP BY {id_col}, lower(entity)
-      )
-    """

@@ -232,19 +232,3 @@ def parse_robots_sitemaps(text: str) -> list[str]:
                 out.append(u)
     return out
 
-
-def url_pattern(url: str) -> str:
-    """Template a URL for feedback stats: digits->{num}, uuid->{uuid}, hex ids->{id}.
-
-    Mirrors the pattern extraction of reference feedback.py:143-179.
-    """
-    p = url_path(url)
-    p = re.sub(
-        r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}",
-        "{uuid}",
-        p,
-        flags=re.IGNORECASE,
-    )
-    p = re.sub(r"\b[0-9a-f]{16,}\b", "{id}", p, flags=re.IGNORECASE)
-    p = re.sub(r"\d+", "{num}", p)
-    return p

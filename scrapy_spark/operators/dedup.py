@@ -95,31 +95,6 @@ def stage_bloom_delta(
     return catalog.stage(delta, "bloom", gen)
 
 
-def write_bucketed_seen(
-    spark: SparkSession, seen: DataFrame, table: str, buckets: int = 64
-) -> None:
-    """Persist the seen set BUCKETED on url_hash (the 10^10 layout: cuckoo-
-    style — every membership probe touches exactly one bucket, and the seen
-    side of the anti-join needs no exchange and no sort at read time)."""
-    (
-        seen.write.bucketBy(buckets, "url_hash")
-        .sortBy("url_hash")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def bucketed_anti_join(
-    spark: SparkSession, cands: DataFrame, seen_table: str
-) -> DataFrame:
-    """candidates − bucketed seen table: the exact tier's at-scale form.
-    Only the candidate side shuffles (into the table's bucketing); the seen
-    side streams straight from its buckets (asserted in
-    tests/test_bloom_shards.py::test_bucketed_seen_join_no_seen_exchange)."""
-    return cands.join(spark.table(seen_table), "url_hash", "left_anti")
-
-
 def merged_bloom_rows(
     spark: SparkSession, catalog: SnapshotCatalog, n_shards: int = N_SHARDS
 ) -> DataFrame | None:

@@ -107,15 +107,13 @@ def phash_bands(
     id_col: str = "image_id",
     phash_col: str = "phash",
     n_bands: int = 4,
-    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Unpivot a 64-bit perceptual hash into ``n_bands`` equal bit-bands —
     the simhash banding trick applied to images: two hashes within hamming
     distance h < n_bands MUST agree on at least one band (pigeonhole), so a
     band-equi self-join has complete recall for that radius. Arithmetic
     shift + mask keeps each band a small non-negative int regardless of the
-    phash sign bit. ``extra_cols`` ride along unchanged (mediaops carries
-    frame_index for the video variant)."""
+    phash sign bit."""
     assert 64 % n_bands == 0, n_bands
     width = 64 // n_bands
     mask = (1 << width) - 1
@@ -133,9 +131,8 @@ def phash_bands(
     return meta.select(
         F.col(id_col).alias("image_id"),
         F.col(phash_col).alias("phash"),
-        *extra_cols,
         F.explode(arr).alias("b"),
-    ).select("image_id", "phash", *extra_cols, "b.band_idx", "b.band_val")
+    ).select("image_id", "phash", "b.band_idx", "b.band_val")
 
 
 def banded_hamming_pairs(
@@ -146,15 +143,13 @@ def banded_hamming_pairs(
     phash_col: str = "phash",
     materialize: bool = True,
     max_band_freq: int | None = None,
-    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """The shared banded-hamming kernel: band-equi candidate join over
     ``phash_bands`` then the EXACT ``bit_count(a ^ b)`` verify — ONE
-    implementation serving still images (phash_neardup_pairs) and video
-    frames (mediaops.video_neardup_pairs via ``extra_cols``).
+    implementation serving still images (phash_neardup_pairs) and the
+    simhash text twin (entry_queries dedup_simhash_pairs).
 
-    Output: (image_a, image_b, <extra>_a..., <extra>_b..., hamming), one
-    row per verified pair. The hamming filter runs BEFORE the distinct
+    Output: (image_a, image_b, hamming), one row per verified pair. The hamming filter runs BEFORE the distinct
     (identical result — the predicate is a pure function of the row — but
     the distinct then shuffles only survivors, and most band collisions
     fail the verify). Recall is complete for ``max_hamming < n_bands``
@@ -167,13 +162,7 @@ def banded_hamming_pairs(
     assert max_hamming < n_bands, (max_hamming, n_bands)
     from ..plans.materialize import materialize as _cut
 
-    bands = phash_bands(
-        meta,
-        id_col=id_col,
-        phash_col=phash_col,
-        n_bands=n_bands,
-        extra_cols=extra_cols,
-    )
+    bands = phash_bands(meta, id_col=id_col, phash_col=phash_col, n_bands=n_bands)
     if max_band_freq is not None:
         from .neardup import cap_posting_lists
 
@@ -185,12 +174,6 @@ def banded_hamming_pairs(
     if materialize:
         bands = _cut(bands, name="phash-bands")
     a, b = bands.alias("a"), bands.alias("b")
-    sides = [
-        F.col("a.image_id").alias("image_a"),
-        F.col("b.image_id").alias("image_b"),
-    ]
-    for c in extra_cols:
-        sides += [F.col(f"a.{c}").alias(f"{c}_a"), F.col(f"b.{c}").alias(f"{c}_b")]
     return (
         a.join(
             b,
@@ -199,7 +182,8 @@ def banded_hamming_pairs(
             & (F.col("a.image_id") < F.col("b.image_id")),
         )
         .select(
-            *sides,
+            F.col("a.image_id").alias("image_a"),
+            F.col("b.image_id").alias("image_b"),
             F.expr("bit_count(a.phash ^ b.phash)").cast("int").alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
@@ -265,41 +249,6 @@ def phash_components(
     return all_ids.select("image_id").join(comp, "image_id", "left").select(
         "image_id",
         F.coalesce(F.col("component_id"), F.col("image_id")).alias("component_id"),
-    )
-
-
-THUMB_SCHEMA = "image_id string, thumb binary, thumb_w int, thumb_h int"
-
-
-def thumbnail_images(images: DataFrame, max_side: int = 16) -> DataFrame:
-    """Aspect-preserving thumbnails (content_handlers.py:329-340): decode,
-    bilinear-resize so max(w, h) == max_side, re-encode PNG. Arrow-batched;
-    undecodable rows yield a null thumb (data, not task failure)."""
-    from ..functions.imagefn import encode_png, resize_bilinear
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                rec = {"image_id": row.image_id, "thumb": None,
-                       "thumb_w": None, "thumb_h": None}
-                try:
-                    px = decode_image(bytes(row.bytes), row.fmt)
-                    h, w = px.shape[:2]
-                    scale = max_side / max(w, h)
-                    tw, th = max(1, round(w * scale)), max(1, round(h * scale))
-                    rec.update(
-                        thumb=encode_png(resize_bilinear(px, tw, th)),
-                        thumb_w=tw,
-                        thumb_h=th,
-                    )
-                except (NotImplementedError, ValueError):
-                    pass
-                out.append(rec)
-            yield pd.DataFrame(out)
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=THUMB_SCHEMA
     )
 
 

@@ -2,17 +2,18 @@
 
 Rebuilds the reference's LinkGraphAnalyzer
 (``Scraping_project/src/common/link_graph.py``):
-- PageRank: damping 0.85, convergence 1e-4, max-normalized
-  (link_graph.py:182-247)
-- HITS hub/authority: L2-normalized, convergence 1e-4 (link_graph.py:249-313)
+- PageRank: damping 0.85, max-normalized (link_graph.py:182-247)
+- HITS hub/authority: L2-normalized (link_graph.py:249-313)
 - degree stats (link_graph.py:399-431)
 
 Spark-first: each iteration is ``ranks ⋈ edges`` + ``groupBy(dst).sum`` —
 partial (map-side) aggregation makes the per-iteration shuffle proportional
 to the edge partition count, and the rank table (nodes only) stays small
 relative to edges. Dangling-node mass is redistributed uniformly, matching
-the uniform-teleport convention. Iteration count is fixed (deterministic
-results) rather than convergence-tested when used in oracle-checked paths.
+the uniform-teleport convention. Both loops are fixed-point (integer)
+and run a fixed iteration count, so results are bit-identical across
+engines, partitionings and run order — the form the DuckDB oracle checks;
+tests/test_linkgraph.py pins them to a float numpy reference.
 """
 
 from __future__ import annotations
@@ -21,9 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.materialize import materialize as _cut
-from ..plans.materialize import staging_dir as _staging_dir
-
-
 
 # After localCheckpoint the rank/score side loses size statistics, so AQE
 # falls back to a per-iteration SortMergeJoin of edges x ranks. The rank
@@ -142,289 +140,6 @@ def degree_stats(edges: DataFrame, materialize: bool = True) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int | None = 10,
-    damping: float = 0.85,
-    tol: float | None = None,
-    max_iterations: int = 100,
-    stats: dict | None = None,
-    materialize: bool = True,
-    bucketed_table: str | None = None,
-    buckets: int = 64,
-    plan_probe: list | None = None,
-) -> DataFrame:
-    """Iterative PageRank; returns (node, rank) max-normalized to [0,1].
-
-    edges: (src, dst) DataFrame. Two stopping modes, matching the reference
-    (link_graph.py:207-247): fixed ``iterations`` (deterministic — the
-    oracle-checked default) or ``tol`` convergence (stop when
-    max |rank - prev| < tol, bounded by ``max_iterations``; the reference
-    uses tol=1e-4, max 100). Convergence mode pays one extra delta
-    aggregation per iteration. Pass a dict as ``stats`` to receive
-    {"iterations", "final_delta"}.
-
-    Beyond BROADCAST_NODES the contribution join routes through a bucketed
-    edge layout automatically (one-time bucketed write, zero per-iteration
-    edge exchange); ``bucketed_table`` names a pre-bucketed (src, dst,
-    out_deg) table (:func:`write_bucketed_edges`) to skip the write.
-    """
-    spark = edges.sparkSession
-    if bucketed_table is not None:
-        bg: _BucketedGraph | None = _BucketedGraph(spark, bucketed_table, None)
-        e = bg.src_edges()
-        nodes = nodes_of(e).cache()
-        n = nodes.count()
-        out_deg = e.select("src", "out_deg").distinct()
-    else:
-        edges = _materialize_edges(edges, materialize)
-        nodes = nodes_of(edges).cache()
-        n = nodes.count()
-        out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-        # edges with out-degree attached; reused every iteration — cached
-        # while the rank side broadcasts, persisted bucketed beyond that
-        e = edges.join(out_deg, "src")
-        bg = _bucketize(spark, e, n, None, buckets=buckets)
-        e = bg.src_edges() if bg is not None else e.cache()
-    # dangling node set is static; compute once
-    dangling_nodes = nodes.join(
-        out_deg.select(F.col("src").alias("node")), "node", "left_anti"
-    ).cache()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    n_rounds = max_iterations if tol is not None else iterations
-    it = 0
-    delta = None
-    try:
-        for it in range(1, n_rounds + 1):
-            # truncate plan lineage each iteration — without this the logical
-            # plan doubles per iteration and Catalyst re-derives the whole
-            # history (cut mechanism pluggable via plans/materialize: durable
-            # parquet on a cluster, localCheckpoint locally)
-            _probe(plan_probe, ranks)
-            ranks = _cut(ranks, name="pr-ranks")
-            prev = ranks
-            if bg is not None:
-                contribs = bucketed_contribs(
-                    spark,
-                    bg.src_table,
-                    ranks.select("node", F.col("rank").alias("r")),
-                    integer=False,
-                )
-            else:
-                contribs = (
-                    e.join(_rank_side(ranks, n), e.src == ranks.node)
-                    .select(F.col("dst").alias("node"), (F.col("rank") / F.col("out_deg")).alias("c"))
-                    .groupBy("node")
-                    .agg(F.sum("c").alias("contrib"))
-                )
-            # dangling mass redistributed uniformly — kept as a 1-row
-            # broadcast instead of a driver collect, so each iteration is ONE
-            # job (the eager localCheckpoint), not two
-            dmass = (
-                ranks.join(dangling_nodes, "node", "left_semi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dmass"))
-            )
-            ranks = (
-                nodes.join(contribs, "node", "left")
-                .fillna(0.0, ["contrib"])
-                .crossJoin(F.broadcast(dmass))
-                .select(
-                    "node",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping) * F.col("_dmass") / F.lit(float(n))
-                        + F.lit(damping) * F.col("contrib")
-                    ).alias("rank"),
-                )
-            )
-            if tol is not None:
-                ranks = _cut(ranks, name="pr-ranks")
-                delta = (
-                    ranks.join(prev.select("node", F.col("rank").alias("_pr")), "node")
-                    .agg(F.max(F.abs(F.col("rank") - F.col("_pr"))).alias("d"))
-                    .collect()[0]["d"]
-                )
-                if delta is not None and delta < tol:
-                    break
-        if stats is not None:
-            stats["iterations"] = it
-            stats["final_delta"] = delta
-        dangling_nodes.unpersist()
-        _probe(plan_probe, ranks)
-        if bg is not None:
-            # cut before dropping auto-bucketed tables (the finally): the
-            # final ranks plan still reads them until materialized
-            ranks = _cut(ranks, name="pr-ranks")
-    finally:
-        # drop auto-bucketed tables on EVERY exit — an executor loss or
-        # interrupt mid-iteration must not leak a warehouse-resident copy of
-        # the edge table; guarded so cleanup on a dead session can't mask
-        # the loop's own failure
-        if bg is not None:
-            try:
-                bg.close()
-            except Exception:
-                pass
-    # max-normalize (link_graph.py:244-247)
-    mx = ranks.agg(F.max("rank")).collect()[0][0]
-    out = ranks.select("node", (F.col("rank") / F.lit(mx)).alias("rank"))
-    nodes.unpersist()
-    if bg is None:
-        e.unpersist()
-    return out
-
-
-def hits(
-    edges: DataFrame,
-    iterations: int | None = 10,
-    tol: float | None = None,
-    max_iterations: int = 100,
-    stats: dict | None = None,
-    materialize: bool = True,
-    bucketed_tables: tuple[str, str] | None = None,
-    buckets: int = 64,
-    plan_probe: list | None = None,
-) -> DataFrame:
-    """HITS hubs/authorities, L2-normalized per iteration (link_graph.py:249-313).
-
-    HITS joins edges on BOTH keys per iteration (src for hub→authority, dst
-    for authority→hub), so the beyond-BROADCAST_NODES layout needs one
-    bucketed copy per orientation — ``bucketed_tables`` is (src-bucketed,
-    dst-bucketed), written by :func:`write_bucketed_edges` with
-    ``key="src"`` / ``key="dst"``; past the threshold with no tables given,
-    both copies are auto-written once and dropped at the end.
-
-    Returns (node, hub, authority). Stopping modes as in :func:`pagerank`:
-    fixed ``iterations`` or ``tol`` convergence on
-    max(|hub-prev|, |authority-prev|) bounded by ``max_iterations``
-    (reference: tol=1e-4, max 100, link_graph.py:276-313).
-
-    L2 norms are read with per-iteration 1-row scalar collects over the live
-    plan. This is a deliberate, MEASURED choice (Spark 4.1, local mode):
-
-    - broadcast-1-row-norm cross-joins (the :func:`hits_exact` pattern) in an
-      UNBOUNDED loop go exponentially slow past ~16 iterations (per-iteration
-      wall time doubles: 1.4s → 76s by iteration 21) despite constant plan
-      size — a driver-side broadcast-exchange pathology;
-    - adding localCheckpoint(eager=False) on the raw tables to avoid the
-      norm's recompute degrades the same way;
-    - the plain scalar collect stays flat (~0.9 s/iteration through 100+).
-
-    hits_exact keeps broadcast norms: its iteration count is small and FIXED
-    (5, far below the cliff) and the driver-checked path must stay
-    collect-free with one job per iteration. pagerank's single broadcast
-    (dmass) per iteration also measures flat to 60+ iterations.
-    """
-    spark = edges.sparkSession
-    if bucketed_tables is not None:
-        bg: _BucketedGraph | None = _BucketedGraph(
-            spark, bucketed_tables[0], bucketed_tables[1]
-        )
-        e_src, e_dst = bg.src_edges(), bg.dst_edges()
-        nodes = nodes_of(e_src).cache()
-        n = nodes.count()
-    else:
-        edges = _materialize_edges(edges, materialize)
-        nodes = nodes_of(edges).cache()
-        n = nodes.count()
-        bg = _bucketize(spark, edges, n, None, need_dst=True, buckets=buckets)
-        if bg is not None:
-            e_src, e_dst = bg.src_edges(), bg.dst_edges()
-        else:
-            e_src = e_dst = edges.cache()
-
-    def _side(df: DataFrame) -> DataFrame:
-        # bucketed mode: NEVER broadcast — the score side must shuffle into
-        # the edge bucketing for the co-partition join to fire
-        return df if bg is not None else _rank_side(df, n)
-
-    def _l2_normalize(raw: DataFrame, col: str) -> DataFrame:
-        # staged (cluster) mode: cut raw through the materializer seam
-        # FIRST, so the norm's scalar read and the normalized select both
-        # consume the staged parquet — the collect costs one tiny agg over
-        # a written table instead of a live-plan recompute, and executor
-        # loss can't invalidate it. Local mode keeps the live-plan collect
-        # (measured flat ~0.9 s/iteration; see the pathology notes above).
-        if _staging_dir(spark) is not None:
-            raw = _cut(raw, name=f"hits-{col}-raw")
-        nrm = raw.agg(F.sqrt(F.sum(F.col(col) ** 2))).collect()[0][0] or 1.0
-        return raw.select("node", (F.col(col) / F.lit(float(nrm))).alias(col))
-
-    scores = nodes.select("node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority"))
-    n_rounds = max_iterations if tol is not None else iterations
-    it = 0
-    delta = None
-    try:
-        for it in range(1, n_rounds + 1):
-            scores = _cut(scores, name="hits-scores")  # truncate iterative lineage
-            prev = scores
-            araw = (
-                e_src.join(_side(scores.select(F.col("node").alias("src"), "hub")), "src")
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("hub").alias("authority"))
-            )
-            # probe the PRE-normalize join plans: normalization hides the edge
-            # scan behind a checkpoint, so these are where the bucketed-layout
-            # plan assertions look
-            _probe(plan_probe, araw)
-            auth = _l2_normalize(araw, "authority")
-            hraw = (
-                e_dst.join(_side(auth.select(F.col("node").alias("dst"), "authority")), "dst")
-                .groupBy(F.col("src").alias("node"))
-                .agg(F.sum("authority").alias("hub"))
-            )
-            _probe(plan_probe, hraw)
-            hub = _l2_normalize(hraw, "hub")
-            scores = (
-                nodes.join(hub, "node", "left").join(auth, "node", "left").fillna(
-                    0.0, ["hub", "authority"]
-                )
-            )
-            if tol is not None:
-                scores = _cut(scores, name="hits-scores")
-                delta = (
-                    scores.join(
-                        prev.select(
-                            "node",
-                            F.col("hub").alias("_ph"),
-                            F.col("authority").alias("_pa"),
-                        ),
-                        "node",
-                    )
-                    .agg(
-                        F.max(
-                            F.greatest(
-                                F.abs(F.col("hub") - F.col("_ph")),
-                                F.abs(F.col("authority") - F.col("_pa")),
-                            )
-                        ).alias("d")
-                    )
-                    .collect()[0]["d"]
-                )
-                if delta is not None and delta < tol:
-                    break
-        if stats is not None:
-            stats["iterations"] = it
-            stats["final_delta"] = delta
-        if bg is not None:
-            # cut before dropping auto-bucketed tables (final plan reads them)
-            scores = _cut(scores, name="hits-scores")
-    finally:
-        # drop auto-bucketed tables on EVERY exit — a failure mid-
-        # iteration must not leak a warehouse-resident edge copy;
-        # guarded so cleanup on a dead session can't mask the loop's
-        # own failure
-        if bg is not None:
-            try:
-                bg.close()
-            except Exception:
-                pass
-    nodes.unpersist()
-    if bg is None:
-        e_src.unpersist()
-    return scores
-
-
 PR_SCALE = 1_000_000  # rank unit: micros of n x rank (mass-scaled)
 HITS_SCALE = 1_000  # millis; norm sums must fit bigint (see hits_exact)
 
@@ -439,11 +154,13 @@ def pagerank_exact(
     buckets: int = 64,
     plan_probe: list | None = None,
 ) -> DataFrame:
-    """Fixed-point PageRank — the driver-checkable (cross-engine hash-exact)
-    variant of :func:`pagerank`. Bucketed-layout routing as in
-    :func:`pagerank` (automatic past BROADCAST_NODES, or pass
-    ``bucketed_table``); integer arithmetic means the bucketed and broadcast
-    paths are bit-identical, which the plan test pins.
+    """Fixed-point PageRank — driver-checkable (cross-engine hash-exact).
+    Past BROADCAST_NODES the contribution join routes through a bucketed
+    edge layout automatically (one-time bucketed write, zero per-iteration
+    edge exchange); ``bucketed_table`` names a pre-bucketed (src, dst,
+    out_deg) table (:func:`write_bucketed_edges`) to skip the write.
+    Integer arithmetic means the bucketed and broadcast paths are
+    bit-identical, which the plan test pins.
 
     Ranks are bigints holding ``scale`` x n x rank (mass-scaled so the
     granularity is relative to the MEAN rank at any node count: every node
@@ -451,7 +168,7 @@ def pagerank_exact(
     use truncating division (Spark ``div`` == DuckDB ``//`` for positive
     ints), sums are exact bigints, damping is the rational 85/100 — so the
     result is bit-identical across engines, partitionings and run order.
-    Same recurrence as the float version: uniform teleport
+    The float recurrence, quantized: uniform teleport
     (100-damping_pct)%, dangling mass redistributed uniformly, one job per
     iteration (dangling mass rides a broadcast 1-row cross-join), output
     max-normalized to [0,1] doubles rounded 6dp (link_graph.py:182-247).
@@ -579,7 +296,8 @@ def hits_exact(
     buckets: int = 64,
     plan_probe: list | None = None,
 ) -> DataFrame:
-    """Fixed-point HITS — the driver-checkable variant of :func:`hits`.
+    """Fixed-point HITS hubs/authorities, L2-normalized per iteration
+    (link_graph.py:249-313) — driver-checkable (cross-engine hash-exact).
 
     Hub/authority scores re-quantize to bigint millis after every L2
     normalization, so every SUM in the recurrence runs over exact integers
@@ -598,7 +316,12 @@ def hits_exact(
     done ONCE at output instead. The DuckDB oracle keeps the dense unrolled
     form (entry_queries._hits_sql); results are hash-identical.
 
-    Bucketed-layout routing as in :func:`hits` (two orientations); integer
+    HITS joins edges on BOTH keys per iteration (src for hub→authority, dst
+    for authority→hub), so the beyond-BROADCAST_NODES layout needs one
+    bucketed copy per orientation — ``bucketed_tables`` is (src-bucketed,
+    dst-bucketed), written by :func:`write_bucketed_edges` with
+    ``key="src"`` / ``key="dst"``; past the threshold with no tables given,
+    both copies are auto-written once and dropped at the end. Integer
     arithmetic keeps bucketed and broadcast results bit-identical.
     """
     spark = edges.sparkSession
@@ -628,9 +351,10 @@ def hits_exact(
         # both consume `raw`; without it the join+agg upstream executes
         # twice per normalize (ReuseExchange does not fire across the
         # broadcast boundary) — measured 18-24s -> 13s at sf0.1. Lazy adds
-        # no extra job (the broadcast materializes it), and the FIXED
-        # 5-iteration count stays far below the unbounded-loop pathologies
-        # documented on :func:`hits`.
+        # no extra job (the broadcast materializes it). Broadcast 1-row norm
+        # cross-joins degrade in UNBOUNDED loops (measured on Spark 4.1,
+        # local mode: per-iteration wall time doubles past ~16 iterations);
+        # the FIXED 5-iteration count stays far below that cliff.
         raw = _cut(raw, eager=False, name="hitsx-raw")
         nrm = raw.agg(
             F.sqrt(F.sum(F.col(col) * F.col(col)).cast("double")).alias("_nrm")
@@ -733,8 +457,7 @@ def write_bucketed_edges(
     edge bucketing, and the edge side streams straight from its buckets —
     zero per-iteration exchange on the dominant table. PageRank joins on src
     only; HITS joins on src (hub→auth) AND dst (auth→hub), so it takes one
-    table per orientation. Same layout family as the bucketed url_seen set
-    (operators/dedup.write_bucketed_seen)."""
+    table per orientation."""
     (
         edges.write.bucketBy(buckets, key)
         .sortBy(key)
@@ -744,22 +467,18 @@ def write_bucketed_edges(
     )
 
 
-def bucketed_contribs(
-    spark, edges_table: str, ranks: DataFrame, integer: bool = True
-) -> DataFrame:
+def bucketed_contribs(spark, edges_table: str, ranks: DataFrame) -> DataFrame:
     """One PageRank contribution step against a bucketed edge table:
     edges ⋈ ranks on src with the EDGE side exchange-free (plan-asserted in
     tests/test_linkgraph.py) — the rank side is NOT broadcast: it shuffles
     into the edge bucketing, which is the whole point past BROADCAST_NODES.
     ``ranks``: (node, r); the edge table must carry (src, dst, out_deg).
-    ``integer`` selects the fixed-point truncating division
-    (:func:`pagerank_exact`) vs float division (:func:`pagerank`)."""
+    Fixed-point truncating division, as in :func:`pagerank_exact`."""
     e = spark.table(edges_table)
     r = ranks.select(F.col("node").alias("src"), "r")
-    c = F.expr("r div out_deg") if integer else F.col("r") / F.col("out_deg")
     return (
         e.join(r, "src")
-        .select(F.col("dst").alias("node"), c.alias("c"))
+        .select(F.col("dst").alias("node"), F.expr("r div out_deg").alias("c"))
         .groupBy("node")
         .agg(F.sum("c").alias("contrib"))
     )

@@ -179,60 +179,13 @@ def ngram_jaccard_pairs(
     )
 
 
-def ngram_containment_pairs(
-    shingles: DataFrame,
-    threshold: float = 0.9,
-    max_doc_freq: int | None = None,
-    materialize: bool = True,
-) -> DataFrame:
-    """Asymmetric containment near-dup: C(A in B) = |A∩B| / |A| — the
-    direction Jaccard misses (a short doc quoted wholesale inside a long
-    one scores high containment but low Jaccard; training pipelines drop
-    the contained copy). Same inverted-index candidate join and capping
-    discipline as ngram_jaccard_pairs; one extra column each way. A pair
-    is emitted when EITHER direction clears ``threshold``; which side is
-    contained is read off the two columns."""
-    if max_doc_freq is not None:
-        if materialize:
-            shingles = _cut(shingles, name="cont-shingles-raw")
-        shingles = cap_posting_lists(shingles, max_doc_freq)
-    if materialize:
-        shingles = _cut(shingles, name="cont-shingles")
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = shingles.alias("a")
-    b = shingles.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("common"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    c_ab = F.col("common") / F.col("sa.sz").cast("double")
-    c_ba = F.col("common") / F.col("sb.sz").cast("double")
-    return (
-        pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .filter((c_ab >= threshold) | (c_ba >= threshold))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(c_ab, 6).alias("containment_ab"),
-            F.round(c_ba, 6).alias("containment_ba"),
-        )
-    )
-
-
 def duplicate_spans(grams: DataFrame, k: int) -> DataFrame:
     """Span-level EXACT substring dedup — the distributed recast of the
     suffix-array dedup in "Deduplicating Training Data Makes Language
     Models Better" (Lee et al. 2021): find every maximal token span whose
     k-grams all recur in OTHER documents, so the pipeline can cut the span
-    instead of dropping the whole doc (the doc-grain ops ngram_jaccard /
-    containment decide doc fate; this one localizes the overlap).
+    instead of dropping the whole doc (the doc-grain ngram_jaccard decides
+    doc fate; this one localizes the overlap).
 
     ``grams`` = (doc_id, pos, g): one row per k-gram occurrence, pos
     1-based. A k-gram is *duplicated* when it appears in >= 2 distinct

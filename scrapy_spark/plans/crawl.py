@@ -494,237 +494,241 @@ class CrawlJob:
             *[c for c in RESULT_COLS if c != "bytes"],
             F.col("bytes").isNotNull().alias("_has_bytes"),
         ).cache()
-        slim.count()  # materialize once before the concurrent consumers
-        # transient error classes with attempts left re-enqueue instead of
-        # entering the seen set (error taxonomy + per-type retry policy,
-        # retry_strategies.py:17-101; validator.py:444-462). error_type was
-        # produced by functions/errors.classify_error inside the fetch UDF.
-        # NB: isin() is NULL (not false) for success rows whose error_type is
-        # NULL — coalesce so ~transient keeps them (SQL three-valued logic)
-        # Finality was decided INSIDE the fetch UDF (is_final column):
-        # transient = retryable error class AND attempts remain under the
-        # per-host cap — the base MAX_ATTEMPTS, or the adaptive config's
-        # learned max_attempts (request_infrastructure.py:189-190). One
-        # persisted decision keeps the seen-set filter, the retry
-        # re-enqueue and revalidation finality consistent by construction.
-        transient = ~F.col("is_final")
+        try:
+            slim.count()  # materialize once before the concurrent consumers
+            # transient error classes with attempts left re-enqueue instead of
+            # entering the seen set (error taxonomy + per-type retry policy,
+            # retry_strategies.py:17-101; validator.py:444-462). error_type was
+            # produced by functions/errors.classify_error inside the fetch UDF.
+            # NB: isin() is NULL (not false) for success rows whose error_type is
+            # NULL — coalesce so ~transient keeps them (SQL three-valued logic)
+            # Finality was decided INSIDE the fetch UDF (is_final column):
+            # transient = retryable error class AND attempts remain under the
+            # per-host cap — the base MAX_ATTEMPTS, or the adaptive config's
+            # learned max_attempts (request_infrastructure.py:189-190). One
+            # persisted decision keeps the seen-set filter, the retry
+            # re-enqueue and revalidation finality consistent by construction.
+            transient = ~F.col("is_final")
 
-        seen_rows = slim.filter(
-            ~transient & (F.col("source_type") != "revalidate")
-        ).select(
-            "url_hash",
-            "url",
-            "host",
-            F.lit(gen).alias("generation"),
-            F.pmod(F.col("url_hash"), F.lit(dedup_ops.N_SHARDS)).alias("shard"),
-        )
-        # per-partition lineage: (generation, host_shard=host, stage counts);
-        # staged as a DataFrame write — NEVER collected. At the 10^10 design
-        # point host cardinality is millions; a per-generation driver
-        # materialization here would be on the hot path.
-        lineage_df = (
-            slim.groupBy("host")
-            .agg(
-                F.count("*").alias("scheduled"),
-                F.sum(F.when(F.col("is_valid"), 1).otherwise(0)).alias("fetched"),
-                F.sum(F.when(~F.col("is_valid"), 1).otherwise(0)).alias("failed"),
-                F.sum(
-                    F.when(F.col("content_type").startswith("image/"), 1).otherwise(0)
-                ).alias("images"),
-                # interstage schema gate, folded into this job (free); the
-                # bytes invariant reads the precomputed flag, not the column
-                F.sum(
-                    F.when(
-                        validation_ops.schema_valid_expr(F.col("_has_bytes")), 1
-                    ).otherwise(0)
-                ).alias("schema_valid"),
+            seen_rows = slim.filter(
+                ~transient & (F.col("source_type") != "revalidate")
+            ).select(
+                "url_hash",
+                "url",
+                "host",
+                F.lit(gen).alias("generation"),
+                F.pmod(F.col("url_hash"), F.lit(dedup_ops.N_SHARDS)).alias("shard"),
             )
-            .withColumn("generation", F.lit(gen))
-        )
-        retries = slim.filter(transient).select(
-            F.col("url").alias("raw_url"),
-            "source_url",
-            "source_type",
-            "anchor",
-            "depth",
-            (F.col("attempt") + 1).alias("attempt"),
-        )
-        nxt = (
-            extract_candidates(slim, params.heuristic_mining)
-            .unionByName(retries)
-            .withColumn("generation", F.lit(gen + 1))
-        )
-        # The rollup writes are independent tiny jobs over the cached slim
-        # table; submit them from a small thread pool so their scheduling
-        # latencies overlap (guide §2.6) instead of serializing ~6 job
-        # launches per generation. Each stage() writes its own uuid-named
-        # temp dir, so concurrent staging is safe; failures surface at
-        # .result() below and nothing commits without every table staged.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = {
-                "url_seen": pool.submit(
-                    self.catalog.stage, seen_rows, "url_seen", gen, 4
-                ),
-                "lineage": pool.submit(
-                    self.catalog.stage, lineage_df, "lineage", gen, 4
-                ),
-                "candidates": pool.submit(
-                    self.catalog.stage, nxt, "candidates", gen, 16
-                ),
-            }
-            if params.learned_filters:
-                from ..operators.frontier import stat_deltas
-
-                sec_delta, pat_delta = stat_deltas(slim)
-                futs["section_stats"] = pool.submit(
-                    self.catalog.stage, sec_delta, "section_stats", gen, 1
+            # per-partition lineage: (generation, host_shard=host, stage counts);
+            # staged as a DataFrame write — NEVER collected. At the 10^10 design
+            # point host cardinality is millions; a per-generation driver
+            # materialization here would be on the hot path.
+            lineage_df = (
+                slim.groupBy("host")
+                .agg(
+                    F.count("*").alias("scheduled"),
+                    F.sum(F.when(F.col("is_valid"), 1).otherwise(0)).alias("fetched"),
+                    F.sum(F.when(~F.col("is_valid"), 1).otherwise(0)).alias("failed"),
+                    F.sum(
+                        F.when(F.col("content_type").startswith("image/"), 1).otherwise(0)
+                    ).alias("images"),
+                    # interstage schema gate, folded into this job (free); the
+                    # bytes invariant reads the precomputed flag, not the column
+                    F.sum(
+                        F.when(
+                            validation_ops.schema_valid_expr(F.col("_has_bytes")), 1
+                        ).otherwise(0)
+                    ).alias("schema_valid"),
                 )
-                futs["pattern_stats"] = pool.submit(
-                    self.catalog.stage, pat_delta, "pattern_stats", gen, 1
+                .withColumn("generation", F.lit(gen))
+            )
+            retries = slim.filter(transient).select(
+                F.col("url").alias("raw_url"),
+                "source_url",
+                "source_type",
+                "anchor",
+                "depth",
+                (F.col("attempt") + 1).alias("attempt"),
+            )
+            nxt = (
+                extract_candidates(slim, params.heuristic_mining)
+                .unionByName(retries)
+                .withColumn("generation", F.lit(gen + 1))
+            )
+            # The rollup writes are independent tiny jobs over the cached slim
+            # table; submit them from a small thread pool so their scheduling
+            # latencies overlap (guide §2.6) instead of serializing ~6 job
+            # launches per generation. Each stage() writes its own uuid-named
+            # temp dir, so concurrent staging is safe; failures surface at
+            # .result() below and nothing commits without every table staged.
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=4) as pool:
+                futs = {
+                    "url_seen": pool.submit(
+                        self.catalog.stage, seen_rows, "url_seen", gen, 4
+                    ),
+                    "lineage": pool.submit(
+                        self.catalog.stage, lineage_df, "lineage", gen, 4
+                    ),
+                    "candidates": pool.submit(
+                        self.catalog.stage, nxt, "candidates", gen, 16
+                    ),
+                }
+                if params.learned_filters:
+                    from ..operators.frontier import stat_deltas
+
+                    sec_delta, pat_delta = stat_deltas(slim)
+                    futs["section_stats"] = pool.submit(
+                        self.catalog.stage, sec_delta, "section_stats", gen, 1
+                    )
+                    futs["pattern_stats"] = pool.submit(
+                        self.catalog.stage, pat_delta, "pattern_stats", gen, 1
+                    )
+                if params.rate_control:
+                    futs["host_budget"] = pool.submit(
+                        self._rc_stage_update, slim, gen
+                    )
+                if params.adaptive_fetch:
+                    # per-host rollup delta (last <= WINDOW success latencies /
+                    # error types) — the learned-config derivation reads ONLY
+                    # these deltas, never raw fetch history
+                    futs["adaptive_stats"] = pool.submit(
+                        self.catalog.stage,
+                        adaptive_ops.stats_delta(slim).withColumn(
+                            "generation", F.lit(gen)
+                        ),
+                        "adaptive_stats",
+                        gen,
+                        1,
+                    )
+                if params.pagination_guess:
+                    futs["pagination_stats"] = pool.submit(
+                        self.catalog.stage,
+                        pagination_ops.pagination_stats_delta(slim).withColumn(
+                            "generation", F.lit(gen)
+                        ),
+                        "pagination_stats",
+                        gen,
+                        1,
+                    )
+                for key, f in futs.items():
+                    staged[key] = f.result()
+
+            # interstage validation gate (interstage_validation.py:46-49;
+            # pipeline.py:191,222): per-generation schema pass rate, enforced
+            # BEFORE commit — the atomic snapshot means a failing generation
+            # leaves no partial state (concurrently staged files above stay
+            # uncommitted orphans, invisible to every manifest reader)
+            # scalar from the staged lineage footers/column (pyarrow, no Spark job,
+            # no driver-side row materialization)
+            n_schema_valid = self.catalog.staged_column_sum(
+                staged["lineage"], "schema_valid"
+            )
+            v_rate = n_schema_valid / n_sel
+            staged["validation"] = self.catalog.stage_pandas(
+                pd.DataFrame(
+                    [
+                        {
+                            "generation": gen,
+                            "n_rows": n_sel,
+                            "n_schema_valid": n_schema_valid,
+                            "rate": v_rate,
+                            "passed": v_rate >= params.validation_threshold,
+                        }
+                    ]
+                ),
+                "validation",
+                gen,
+            )
+            if params.validation_enforce and v_rate < params.validation_threshold:
+                # stage_failed (alerts.py:163-171): the generation's transaction
+                # is being abandoned, so the record goes to the file channel —
+                # nothing staged here will ever commit
+                msg = (
+                    f"interstage validation gate failed at generation {gen}: "
+                    f"{n_schema_valid}/{n_sel} rows schema-valid "
+                    f"({v_rate:.4f} < {params.validation_threshold})"
+                )
+                if alerts_mod.meets_threshold("error", params.alert_threshold):
+                    alerts_mod.append_jsonl(
+                        self.catalog.root, "error", "stage_failed", msg,
+                        stage="interstage_validation", generation=gen,
+                    )
+                raise ValidationGateError(msg)
+
+            if self.use_bloom:
+                newly_seen = slim.filter(
+                    ~transient & (F.col("source_type") != "revalidate")
+                )
+                if self.use_bloom == "cuckoo":
+                    staged["cuckoo"] = cuckoo_ops.stage_cuckoo_delta(
+                        spark, self.catalog, newly_seen, gen
+                    )
+                else:
+                    staged["bloom"] = dedup_ops.stage_bloom_delta(
+                        spark, self.catalog, newly_seen, gen
+                    )
+
+            # alert records (alerts.py:37-181 AlertManager), committed ATOMICALLY
+            # with the generation: generation_complete, schema-degradation
+            # warnings, breaker openings. Deterministic columns only (no wall
+            # clock) — generation is the logical time, so parity/bit-identity
+            # hold with alerts on. Events that abort the txn use the JSONL file
+            # channel instead (gate above, run() below).
+            alert_rows = [alerts_mod.generation_complete_row(gen, n_sel)]
+            if v_rate < 1.0:
+                alert_rows.append(
+                    alerts_mod.validation_degraded_row(
+                        gen, v_rate, params.validation_threshold
+                    )
                 )
             if params.rate_control:
-                futs["host_budget"] = pool.submit(
-                    self._rc_stage_update, slim, gen
+                # the staged host_budget delta is one row per active host — a
+                # pyarrow footer-sized read, no extra Spark job per generation
+                # (the DataFrame form alerts.breaker_alert_rows exists for
+                # cluster runs where the delta shouldn't visit the driver)
+                brows = self.catalog.staged_read(
+                    staged["host_budget"], columns=["host", "consec", "state"]
                 )
-            if params.adaptive_fetch:
-                # per-host rollup delta (last <= WINDOW success latencies /
-                # error types) — the learned-config derivation reads ONLY
-                # these deltas, never raw fetch history
-                futs["adaptive_stats"] = pool.submit(
-                    self.catalog.stage,
-                    adaptive_ops.stats_delta(slim).withColumn(
-                        "generation", F.lit(gen)
-                    ),
-                    "adaptive_stats",
-                    gen,
-                    1,
-                )
-            if params.pagination_guess:
-                futs["pagination_stats"] = pool.submit(
-                    self.catalog.stage,
-                    pagination_ops.pagination_stats_delta(slim).withColumn(
-                        "generation", F.lit(gen)
-                    ),
-                    "pagination_stats",
-                    gen,
-                    1,
-                )
-            for key, f in futs.items():
-                staged[key] = f.result()
+                alert_rows.extend(alerts_mod.py_breaker_alert_rows(brows, gen))
+            apdf = pd.DataFrame(
+                alert_rows,
+                columns=["generation", "severity", "event", "stage", "host", "message"],
+            ).astype(
+                {
+                    "generation": "int32",
+                    "severity": "string",
+                    "event": "string",
+                    "stage": "string",
+                    "host": "string",
+                    "message": "string",
+                }
+            )
+            staged["alerts"] = self.catalog.stage_pandas(apdf, "alerts", gen)
 
-        # interstage validation gate (interstage_validation.py:46-49;
-        # pipeline.py:191,222): per-generation schema pass rate, enforced
-        # BEFORE commit — the atomic snapshot means a failing generation
-        # leaves no partial state (concurrently staged files above stay
-        # uncommitted orphans, invisible to every manifest reader)
-        # scalar from the staged lineage footers/column (pyarrow, no Spark job,
-        # no driver-side row materialization)
-        n_schema_valid = self.catalog.staged_column_sum(
-            staged["lineage"], "schema_valid"
-        )
-        v_rate = n_schema_valid / n_sel
-        staged["validation"] = self.catalog.stage_pandas(
-            pd.DataFrame(
+            elapsed = time.time() - t0
+            metrics_pdf = pd.DataFrame(
                 [
                     {
                         "generation": gen,
-                        "n_rows": n_sel,
-                        "n_schema_valid": n_schema_valid,
-                        "rate": v_rate,
-                        "passed": v_rate >= params.validation_threshold,
+                        "stage": "crawl_generation",
+                        "items_processed": n_sel,
+                        "items_per_second": float(n_sel) / elapsed if elapsed > 0 else 0.0,
+                        "elapsed_seconds": float(elapsed),
                     }
                 ]
-            ),
-            "validation",
-            gen,
-        )
-        if params.validation_enforce and v_rate < params.validation_threshold:
-            # stage_failed (alerts.py:163-171): the generation's transaction
-            # is being abandoned, so the record goes to the file channel —
-            # nothing staged here will ever commit
+            )
+            staged["metrics"] = self.catalog.stage_pandas(metrics_pdf, "metrics", gen)
+
+            self.catalog.commit(
+                gen, staged, stats={"generation": gen, "scheduled": n_sel}
+            )
+        finally:
+            # every exit — gate failure, a failed pooled stage() future, a
+            # bloom/cuckoo update or commit error — releases the cached
+            # projection; nothing below the commit reads it
             slim.unpersist()
-            msg = (
-                f"interstage validation gate failed at generation {gen}: "
-                f"{n_schema_valid}/{n_sel} rows schema-valid "
-                f"({v_rate:.4f} < {params.validation_threshold})"
-            )
-            if alerts_mod.meets_threshold("error", params.alert_threshold):
-                alerts_mod.append_jsonl(
-                    self.catalog.root, "error", "stage_failed", msg,
-                    stage="interstage_validation", generation=gen,
-                )
-            raise ValidationGateError(msg)
-
-        if self.use_bloom:
-            newly_seen = slim.filter(
-                ~transient & (F.col("source_type") != "revalidate")
-            )
-            if self.use_bloom == "cuckoo":
-                staged["cuckoo"] = cuckoo_ops.stage_cuckoo_delta(
-                    spark, self.catalog, newly_seen, gen
-                )
-            else:
-                staged["bloom"] = dedup_ops.stage_bloom_delta(
-                    spark, self.catalog, newly_seen, gen
-                )
-
-        # alert records (alerts.py:37-181 AlertManager), committed ATOMICALLY
-        # with the generation: generation_complete, schema-degradation
-        # warnings, breaker openings. Deterministic columns only (no wall
-        # clock) — generation is the logical time, so parity/bit-identity
-        # hold with alerts on. Events that abort the txn use the JSONL file
-        # channel instead (gate above, run() below).
-        alert_rows = [alerts_mod.generation_complete_row(gen, n_sel)]
-        if v_rate < 1.0:
-            alert_rows.append(
-                alerts_mod.validation_degraded_row(
-                    gen, v_rate, params.validation_threshold
-                )
-            )
-        if params.rate_control:
-            # the staged host_budget delta is one row per active host — a
-            # pyarrow footer-sized read, no extra Spark job per generation
-            # (the DataFrame form alerts.breaker_alert_rows exists for
-            # cluster runs where the delta shouldn't visit the driver)
-            brows = self.catalog.staged_read(
-                staged["host_budget"], columns=["host", "consec", "state"]
-            )
-            alert_rows.extend(alerts_mod.py_breaker_alert_rows(brows, gen))
-        apdf = pd.DataFrame(
-            alert_rows,
-            columns=["generation", "severity", "event", "stage", "host", "message"],
-        ).astype(
-            {
-                "generation": "int32",
-                "severity": "string",
-                "event": "string",
-                "stage": "string",
-                "host": "string",
-                "message": "string",
-            }
-        )
-        staged["alerts"] = self.catalog.stage_pandas(apdf, "alerts", gen)
-
-        elapsed = time.time() - t0
-        metrics_pdf = pd.DataFrame(
-            [
-                {
-                    "generation": gen,
-                    "stage": "crawl_generation",
-                    "items_processed": n_sel,
-                    "items_per_second": float(n_sel) / elapsed if elapsed > 0 else 0.0,
-                    "elapsed_seconds": float(elapsed),
-                }
-            ]
-        )
-        staged["metrics"] = self.catalog.stage_pandas(metrics_pdf, "metrics", gen)
-
-        self.catalog.commit(
-            gen, staged, stats={"generation": gen, "scheduled": n_sel}
-        )
-        slim.unpersist()
 
         # adaptive_stats retention (round-6 verdict #2): on a fixed,
         # generation-keyed cadence (deterministic under resume — a resumed

@@ -524,10 +524,6 @@ def parse_page_url(cfg: SynthConfig, counts: list[int], url: str) -> tuple[int, 
 _SITEMAP_RE = _re.compile(r"^https://([a-z0-9.-]+)/sitemap\.xml$")
 
 
-def sitemap_url(cfg: SynthConfig, hidx: int) -> str:
-    return f"https://{host_of(cfg, hidx)}/sitemap.xml"
-
-
 def sitemap_entries(cfg: SynthConfig, counts: list[int], hidx: int) -> list[str]:
     """Pages listed in a host's sitemap: every 3rd of the first 15 pages
     (mirrors the reference's robots->Sitemap-><loc> recursion,

@@ -98,6 +98,34 @@ def test_validation_gate_stage_failed(spark, tmp_path, monkeypatch):
     assert not [r for r in recs if r["event"] == "pipeline_complete"]
 
 
+def test_failed_generation_releases_cached_projection(spark, tmp_path):
+    """A generation that dies in a pooled rollup (here the lineage stage)
+    must not leak the cached per-generation projection: the session's
+    persistent-RDD count is back to its pre-generation value after the
+    raise. The job-lifetime robots cache is materialized before the
+    baseline is read, so only per-generation caches are counted."""
+    wd = str(tmp_path / "wd")
+    job = CrawlJob(
+        spark, CFG, CrawlParams(max_generations=1, per_host_budget=8), wd,
+        salt_buckets=2,
+    )
+    stage = job.catalog.stage
+
+    def failing_stage(df, table, *a, **k):
+        if table == "lineage":
+            raise RuntimeError("injected lineage rollup failure")
+        return stage(df, table, *a, **k)
+
+    job.catalog.stage = failing_stage
+    job.robots_df().count()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    with pytest.raises(RuntimeError, match="injected lineage"):
+        job.run()
+    assert job.catalog.committed_generation() == -1
+    assert persisted().size() == before
+
+
 def test_alert_threshold_gates_file_channel(spark, tmp_path):
     """alert_threshold above info suppresses pipeline_complete on the JSONL
     channel; the committed table still records everything (it is the durable

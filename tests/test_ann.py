@@ -411,3 +411,39 @@ def test_ivfpq_recall_monotone_in_n_probe(spark):
     v.unpersist()
     assert r[1] <= r[2] <= r[8], r
     assert r[8] == 1.0, r
+
+
+def test_quantized_embeddings_match_duckdb_at_half_boundaries(spark):
+    """The Spark quantizer must round float32 ``x * 1000`` exactly as the
+    frozen DuckDB _QUANT_SQL does: DuckDB multiplies in float32, so an
+    element whose float32 product lands on a .5 boundary (-0.0525 ->
+    -52.5f -> -53) rounds differently if Spark widens to double first
+    (-52.4999... -> -52). Feeds every ann_* / embed_* query."""
+    import duckdb
+    import pyarrow as pa
+
+    import scrapy_spark.entry_queries as eq
+
+    vals = [-0.0525, 0.1235, 0.0005, -0.3335]
+    arrow = pa.table(
+        {
+            "vec_id": pa.array([0], pa.int64()),
+            "embedding": pa.array([vals], pa.list_(pa.float32())),
+            "label": pa.array([0], pa.int32()),
+        }
+    )
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": [0], "embedding": [vals], "label": [0]}),
+        "vec_id long, embedding array<float>, label int",
+    )
+    orig = eq.load
+    try:
+        eq.load = lambda sp, d, t: df if t == "embeddings" else orig(sp, d, t)
+        got = eq._spark_quantized(spark, "unused").collect()[0]["q"]
+    finally:
+        eq.load = orig
+    con = duckdb.connect()
+    con.register("embeddings", arrow)
+    want = con.execute(eq._QUANT_SQL).fetchall()[0][2]
+    assert want == [-53, 124, 1, -334]
+    assert list(got) == want

@@ -66,35 +66,6 @@ def test_bloom_negative_shards_pass_through(spark, tmp_path_factory):
     one.unpersist()
 
 
-def test_bucketed_seen_join_no_seen_exchange(spark, tmp_path_factory):
-    """The bucketed url_seen layout: the anti-join reads the seen side
-    straight from its buckets — NO Exchange (and no Sort) above the seen
-    scan; only the candidate side shuffles. Equivalent results."""
-    from pyspark.sql import functions as F
-
-    seen = _mk_cands(spark, 400)
-    cands = _mk_cands(spark, 600, offset=100)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        dedup.write_bucketed_seen(spark, seen, "url_seen_bucketed_t", buckets=8)
-        got = dedup.bucketed_anti_join(spark, cands, "url_seen_bucketed_t")
-        # plan BEFORE the action (post-collect AQE dumps embed the initial
-        # plan a second time, double-counting exchange nodes)
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        # exactly ONE exchange: the candidate side; the bucketed scan has none
-        n_exchanges = plan.count("Exchange hashpartitioning")
-        assert n_exchanges == 1, plan
-        assert "SortMergeJoin" in plan and "LeftAnti" in plan
-        assert "Bucketed: true" in plan
-        want = cands.join(seen.select("url_hash"), "url_hash", "left_anti")
-        assert sorted(r["url"] for r in got.collect()) == sorted(
-            r["url"] for r in want.collect()
-        )
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS url_seen_bucketed_t")
-
-
 def test_bloom_shardwise_equivalence_65536(spark, tmp_path_factory):
     """The 10^10 DESIGN POINT itself: 2^16 shards, same exactness and same
     cogroup (never-broadcast) plan. Most shards are empty at test scale —

@@ -133,77 +133,6 @@ def test_sample_mixture_targets_and_determinism(spark):
     assert b[0]["sample_target"] == 1 and b[0]["is_selected"] == 1
 
 
-def test_hygiene_funnel_constructed_three_engine(spark):
-    """Funnel composition pinned on a corpus that fires EVERY branch —
-    including the zero-token doc that text_quality_score's n_tokens > 0
-    filter would silently drop from an inner join (the all-docs-grain fix):
-    it must count in n_docs AND in n_low_quality. Expected hand-computed
-    where deterministic; full row cross-checked against the REGISTERED
-    oracle SQL running live in DuckDB on the same constructed corpus."""
-    import duckdb
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [0, 40, 21, 23, 24, 25, 26, 27],
-            "text": [
-                "a b c d e",            # eval (0 % 20 == 0)
-                "x1 x2 x3 x4 x5",       # eval, disjoint from all train docs
-                "a b c d e",            # exact dup of eval doc -> contaminated
-                "reach me at bob@example.com about the the the offer",  # PII
-                "",                     # zero tokens -> low quality via LEFT JOIN
-                "k l m n o",            # same 5-gram in 3 docs -> boiler-heavy
-                "k l m n o",
-                "k l m n o",
-            ],
-            "source": ["s"] * 8,
-        }
-    )
-    pdf["n_chars"] = pdf["text"].str.len()  # real-table derived column
-    pdf["lang"] = "en"
-    df = spark.createDataFrame(pdf)
-    orig = eq.load
-    try:
-        eq.load = lambda sp, d, t: df if t == "documents" else orig(sp, d, t)
-        got = QUERIES["hygiene_funnel"][0](spark, "unused").collect()[0].asDict()
-    finally:
-        eq.load = orig
-
-    assert got["n_docs"] == 8                    # zero-token doc included
-    assert got["n_eval"] == 2
-    assert got["n_contaminated"] == 1            # doc 21 only
-    assert got["n_boiler_heavy"] == 3            # docs 25-27 (df-3 5-gram)
-    assert got["n_pii_docs"] == 1                # doc 23
-    assert got["n_low_quality"] >= 1             # at least the empty doc
-    assert got["n_sampled"] == 2                 # floor(sqrt(8)) per source
-    assert 0 <= got["n_train_ready"] <= got["n_sampled"]
-
-    con = duckdb.connect()
-    con.register("documents", pdf)
-    want = con.execute(QUERIES["hygiene_funnel"][1]).fetchdf().iloc[0].to_dict()
-    assert {k: int(v) for k, v in want.items()} == {
-        k: int(v) for k, v in got.items()
-    }
-
-
-def test_containment_asymmetric_branch(spark):
-    """The quote/subset case Jaccard misses: doc 2 embeds ALL of doc 1's
-    shingles plus many of its own -> containment_ab 1.0 with Jaccard well
-    under any dedup threshold; a mostly-disjoint doc never pairs."""
-    short = "a b c d e"                       # 3 shingles
-    long_ = short + " p q r s t u v w x y z"  # those 3 + 11 more
-    pdf = pd.DataFrame(
-        {"doc_id": [1, 2, 3], "text": [short, long_, "k l m n o p"]}
-    )
-    rows = _with_docs(spark, pdf, "dedup_ngram_containment")
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["doc_a"], r["doc_b"]) == (1, 2)
-    assert r["containment_ab"] == 1.0            # all of doc 1 inside doc 2
-    assert r["containment_ba"] == round(3 / 14, 6)
-    # the same pair's Jaccard = 3/14 < 0.9 -> dedup_ngram_jaccard at a
-    # containment-grade threshold would never surface it
-
-
 def test_duplicate_spans_constructed(spark):
     """Span-level exact substring dedup (k=8): a 12-token passage shared
     between two docs yields ONE maximal span per doc covering exactly the

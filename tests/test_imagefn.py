@@ -1,4 +1,4 @@
-"""PNG codec roundtrip, determinism, phash and PSNR invariants."""
+"""PNG codec roundtrip, determinism, phash, resize and PSNR invariants."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ from scrapy_spark.functions.imagefn import (
     encode_png,
     phash64,
     psnr,
+    resize_bilinear,
     synth_pixels,
 )
 
@@ -40,6 +41,21 @@ def test_phash_properties():
     assert -(2**63) <= h1 < 2**63
     other = phash64(synth_pixels("img-8", 64, 64))
     assert h1 != other
+
+
+def test_resize_bilinear_properties():
+    # constant image stays constant at any scale
+    const = np.full((32, 48, 3), 77, dtype=np.uint8)
+    out = resize_bilinear(const, 16, 11)
+    assert out.shape == (11, 16, 3) and np.all(out == 77)
+    # horizontal gradient stays monotonic after downscale
+    grad = np.tile(np.linspace(0, 255, 64, dtype=np.uint8)[None, :, None], (8, 1, 3))
+    g2 = resize_bilinear(grad, 16, 8)
+    row = g2[0, :, 0].astype(int)
+    assert all(a <= b for a, b in zip(row, row[1:]))
+    # identity resize is exact
+    px = synth_pixels("imgX", 24, 16)
+    assert np.array_equal(resize_bilinear(px, 24, 16), px)
 
 
 def test_psnr_degrades():

@@ -1,4 +1,5 @@
-"""PageRank/HITS vs a dense numpy reference on a small random graph."""
+"""Fixed-point PageRank/HITS vs a dense float numpy reference on a small
+random graph, plus the bucketed-layout paths."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ import re
 import numpy as np
 import pytest
 
-from scrapy_spark.operators.linkgraph import degree_stats, hits, pagerank
+from scrapy_spark.operators.linkgraph import degree_stats, hits_exact, pagerank_exact
 
 
 @pytest.fixture(scope="module")
@@ -42,15 +43,6 @@ def _np_pagerank(edges, iterations=10, damping=0.85):
     return {v: r[idx[v]] for v in nodes}
 
 
-def test_pagerank_matches_numpy(spark, graph):
-    df, edges = graph
-    got = {r["node"]: r["rank"] for r in pagerank(df, iterations=10).collect()}
-    want = _np_pagerank(edges, iterations=10)
-    assert set(got) == set(want)
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-9, k
-
-
 def _np_hits(edges, iterations=10):
     nodes = sorted({x for e in edges for x in e})
     idx = {v: i for i, v in enumerate(nodes)}
@@ -70,15 +62,6 @@ def _np_hits(edges, iterations=10):
     return {v: (hub[idx[v]], auth[idx[v]]) for v in nodes}
 
 
-def test_hits_matches_numpy(spark, graph):
-    df, edges = graph
-    got = {r["node"]: (r["hub"], r["authority"]) for r in hits(df, iterations=10).collect()}
-    want = _np_hits(edges, iterations=10)
-    for k in want:
-        assert abs(got[k][0] - want[k][0]) < 1e-9
-        assert abs(got[k][1] - want[k][1]) < 1e-9
-
-
 def test_degree_stats(spark, graph):
     df, edges = graph
     got = {r["node"]: (r["out_degree"], r["in_degree"]) for r in degree_stats(df).collect()}
@@ -93,11 +76,9 @@ def test_degree_stats(spark, graph):
 
 def test_pagerank_exact_tracks_float(spark, graph):
     """Fixed-point pagerank_exact (driver-checkable) stays within the
-    quantization error of the float implementation."""
-    from scrapy_spark.operators.linkgraph import pagerank, pagerank_exact
-
-    df, _ = graph
-    f = {r["node"]: r["rank"] for r in pagerank(df, iterations=5).collect()}
+    quantization error of the float numpy recurrence."""
+    df, edges = graph
+    f = _np_pagerank(edges, iterations=5)
     x = {r["node"]: r["rank"] for r in pagerank_exact(df, iterations=5).collect()}
     assert set(f) == set(x)
     for k in f:
@@ -105,10 +86,8 @@ def test_pagerank_exact_tracks_float(spark, graph):
 
 
 def test_hits_exact_tracks_float(spark, graph):
-    from scrapy_spark.operators.linkgraph import hits, hits_exact
-
-    df, _ = graph
-    f = {r["node"]: (r["hub"], r["authority"]) for r in hits(df, iterations=5).collect()}
+    df, edges = graph
+    f = _np_hits(edges, iterations=5)
     x = {r["node"]: (r["hub"], r["authority"]) for r in hits_exact(df, iterations=5).collect()}
     assert set(f) == set(x)
     for k in f:
@@ -117,38 +96,6 @@ def test_hits_exact_tracks_float(spark, graph):
             f[k],
             x[k],
         )
-
-
-def test_pagerank_convergence_mode(spark, graph):
-    """Reference semantics (link_graph.py:207-247): stop when max rank delta
-    < tol, bounded by max_iterations; converged result matches a long
-    fixed-iteration run."""
-    from scrapy_spark.operators.linkgraph import pagerank
-
-    df, _ = graph
-    st = {}
-    conv = {r["node"]: r["rank"] for r in
-            pagerank(df, tol=1e-6, max_iterations=100, stats=st).collect()}
-    assert 1 < st["iterations"] < 100  # actually converged, not capped
-    assert st["final_delta"] < 1e-6
-    fixed = {r["node"]: r["rank"] for r in pagerank(df, iterations=60).collect()}
-    for k in fixed:
-        assert abs(conv[k] - fixed[k]) < 1e-4
-
-
-def test_hits_convergence_mode(spark, graph):
-    from scrapy_spark.operators.linkgraph import hits
-
-    df, _ = graph
-    st = {}
-    conv = {r["node"]: (r["hub"], r["authority"]) for r in
-            hits(df, tol=1e-6, max_iterations=100, stats=st).collect()}
-    assert 1 < st["iterations"] < 100
-    fixed = {r["node"]: (r["hub"], r["authority"]) for r in
-             hits(df, iterations=60).collect()}
-    for k in fixed:
-        assert abs(conv[k][0] - fixed[k][0]) < 1e-4
-        assert abs(conv[k][1] - fixed[k][1]) < 1e-4
 
 
 def test_bucketed_edge_join_no_edge_exchange(spark, tmp_path):
@@ -292,37 +239,6 @@ def test_auto_bucketed_hits_exact_matches_broadcast_path(
     # araw joins for it=2,3; hraw joins for it=1..3
     _assert_bucketed_join_plans(probes, "lg_edges_src_", "src", min_joins=2)
     _assert_bucketed_join_plans(probes, "lg_edges_dst_", "dst", min_joins=3)
-    assert _no_auto_tables(spark) == []
-
-
-def test_auto_bucketed_float_pagerank_and_hits_match(spark, graph, monkeypatch):
-    """Float variants through the same auto-bucketed path: same values as
-    the broadcast path to fp tolerance (per-key float ops are elementwise,
-    but sum order can differ across layouts, so bit-equality isn't
-    guaranteed the way it is for the integer variants)."""
-    import scrapy_spark.operators.linkgraph as lg
-
-    df, _ = graph
-    want_pr = {r["node"]: r["rank"] for r in lg.pagerank(df, iterations=4).collect()}
-    want_h = {
-        r["node"]: (r["hub"], r["authority"])
-        for r in lg.hits(df, iterations=3).collect()
-    }
-    monkeypatch.setattr(lg, "BROADCAST_NODES", 1)
-    got_pr = {
-        r["node"]: r["rank"]
-        for r in lg.pagerank(df, iterations=4, buckets=4).collect()
-    }
-    got_h = {
-        r["node"]: (r["hub"], r["authority"])
-        for r in lg.hits(df, iterations=3, buckets=4).collect()
-    }
-    assert set(got_pr) == set(want_pr)
-    for k in want_pr:
-        assert abs(got_pr[k] - want_pr[k]) < 1e-12, k
-    for k in want_h:
-        assert abs(got_h[k][0] - want_h[k][0]) < 1e-12, k
-        assert abs(got_h[k][1] - want_h[k][1]) < 1e-12, k
     assert _no_auto_tables(spark) == []
 
 

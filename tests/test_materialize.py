@@ -86,27 +86,3 @@ def test_operator_results_identical_across_mechanisms(spark, tmp_path, clear_con
         p.startswith("pr") or p.startswith("edges")
         for p in _staged_files(spark, tmp_path)
     )
-
-
-def test_hits_norms_through_staged_cuts(spark, tmp_path, clear_conf):
-    """hits()'s per-iteration L2-norm collects route the raw table through
-    the materializer seam in staged mode (the cluster-safe form): scores
-    identical to the local-collect path, and the per-iteration raw cuts
-    appear in the staging dir."""
-    from scrapy_spark.operators.linkgraph import hits
-
-    edges = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "src": ["a", "a", "b", "c", "d", "d"],
-                "dst": ["b", "c", "c", "a", "a", "b"],
-            }
-        )
-    )
-    local = sorted(map(tuple, hits(edges, iterations=3).collect()))
-    spark.conf.set(_CONF_KEY, str(tmp_path))
-    staged = sorted(map(tuple, hits(edges, iterations=3).collect()))
-    assert local == staged
-    files = _staged_files(spark, tmp_path)
-    assert any(p.startswith("hits-hub-raw-") for p in files)
-    assert any(p.startswith("hits-authority-raw-") for p in files)

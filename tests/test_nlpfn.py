@@ -1,95 +1,12 @@
-"""Model-free NLP enrichment (functions/nlpfn): the Spark expressions
-reproduce the reference's pure-Python semantics bit-for-bit — in
-particular Counter.most_common's insertion-order tie-break for keywords
-and filter_entities' keep-first case-insensitive dedup."""
+"""Model-free NLP enrichment (functions/nlpfn): the Spark text-stats
+expressions reproduce the reference's get_text_stats semantics."""
 
 from __future__ import annotations
-
-import re
-from collections import Counter
 
 import pandas as pd
 from pyspark.sql import functions as F
 
 from scrapy_spark.functions import nlpfn
-
-
-def _py_keywords(text: str, top_k: int = nlpfn.TOP_KEYWORDS) -> list[str]:
-    """extract_keywords_simple (nlp.py:609-624), verbatim semantics."""
-    words = re.findall(r"[a-zA-Z']{3,}", text.lower())
-    stop = set(nlpfn.STOP_WORDS)
-    filtered = [w for w in words if w not in stop]
-    return [w for w, _ in Counter(filtered).most_common(top_k)]
-
-
-def _py_entities(text: str) -> list[str]:
-    """capitalized-run candidates + filter_entities keep-first dedup."""
-    cands = re.findall(nlpfn._ENTITY_RE, text)
-    seen, out = set(), []
-    for c in cands:
-        k = c.lower()
-        if k not in seen:
-            seen.add(k)
-            out.append(c)
-    return out
-
-
-TEXTS = [
-    # count ties: 'delta'/'echo' both x2, 'echo' first — insertion order
-    "delta echo echo delta alpha alpha alpha the the for",
-    "echo delta delta echo zebra",
-    # stopword-only and empty-ish
-    "the and for with",
-    "",
-    # apostrophes and 3-char cutoff
-    "won't won't can't ab abc abc abc o'neill",
-    # entities with case-variant duplicate and >6-word run (pattern caps at 6)
-    "visit Storrs Campus and STORRS CAMPUS near Gampel Pavilion today. "
-    "One Two Three Four Five Six Seven ends here",
-]
-
-
-def test_keywords_match_counter_most_common(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(len(TEXTS)), "t": TEXTS})
-    )
-    cand = nlpfn.keyword_candidates(df, F.col("t"), "doc_id")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("n").desc(), F.col("first_pos").asc()
-    )
-    got = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= nlpfn.TOP_KEYWORDS)
-        .collect()
-    )
-    by_doc: dict[int, list[tuple[int, str]]] = {}
-    for r in got:
-        by_doc.setdefault(r["doc_id"], []).append((r["rank"], r["keyword"]))
-    for i, text in enumerate(TEXTS):
-        want = _py_keywords(text)
-        have = [kw for _, kw in sorted(by_doc.get(i, []))]
-        assert have == want, (i, have, want)
-
-
-def test_entities_match_reference_filter(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(len(TEXTS)), "t": TEXTS})
-    )
-    got = nlpfn.entity_rows(df, F.col("t"), "doc_id").collect()
-    by_doc: dict[int, list[tuple[int, str]]] = {}
-    for r in got:
-        by_doc.setdefault(r["doc_id"], []).append((r["rank"], r["entity"]))
-    for i, text in enumerate(TEXTS):
-        want = _py_entities(text)
-        have = [e for _, e in sorted(by_doc.get(i, []))]
-        assert have == want, (i, have, want)
-    # the crafted row really exercised dedup and the 6-word cap
-    ents5 = [e for _, e in sorted(by_doc[5])]
-    assert "Storrs Campus" in ents5 and "STORRS CAMPUS" not in ents5
-    assert any(e.split() == ["One", "Two", "Three", "Four", "Five", "Six"]
-               for e in ents5)
 
 
 def test_text_stats_reference_semantics(spark):

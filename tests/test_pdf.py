@@ -1,11 +1,8 @@
-"""PDF codec (functions/pdffn.py) + PDF operator (operators/pdfops.py):
-roundtrip fidelity, reference-semantics fields (content_handlers.py:20-160),
-and crawl integration (pdf_link candidates fetched byte-exact is covered by
-tests/test_crawl_parity.py)."""
+"""PDF codec (functions/pdffn.py): roundtrip fidelity, reference-semantics
+fields (content_handlers.py:20-160) and crawl integration (pdf_link
+candidates fetched byte-exact is covered by tests/test_crawl_parity.py)."""
 
 from __future__ import annotations
-
-import pandas as pd
 
 from scrapy_spark.functions import pdffn
 
@@ -40,35 +37,6 @@ def test_pdf_xref_offsets_valid():
     for i, ln in enumerate(lines[2:n + 1], start=1):
         off = int(ln.split()[0])
         assert data[off:].startswith(f"{i} 0 obj".encode()), i
-
-
-def test_extract_pdf_meta_operator(spark):
-    from scrapy_spark.operators.pdfops import extract_pdf_meta, pdf_embedded_candidates
-
-    rows = [
-        {
-            "url": "https://a.uconn.edu/files/doc1.pdf",
-            "bytes": pdffn.encode_pdf(
-                ["one two three", "four five"], title="t1", author="a1",
-                link_uris=["https://a.uconn.edu/news/p1"],
-            ),
-        },
-        {"url": "https://a.uconn.edu/files/bad.pdf", "bytes": b"not a pdf"},
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows), "url string, bytes binary")
-    got = {r["url"]: r for r in extract_pdf_meta(df, max_pages=1).collect()}
-    ok = got["https://a.uconn.edu/files/doc1.pdf"]
-    assert ok["decode_ok"] and ok["title"] == "t1" and ok["author"] == "a1"
-    assert ok["page_count"] == 2 and ok["pages_processed"] == 1
-    assert ok["word_count"] == 3  # max_pages=1 caps text like the reference
-    assert ok["link_uris"] == ["https://a.uconn.edu/news/p1"]
-    bad = got["https://a.uconn.edu/files/bad.pdf"]
-    assert not bad["decode_ok"] and "not a PDF" in bad["decode_error"]
-
-    cands = pdf_embedded_candidates(extract_pdf_meta(df)).collect()
-    assert [(c["raw_url"], c["source_type"]) for c in cands] == [
-        ("https://a.uconn.edu/news/p1", "pdf_embedded")
-    ]
 
 
 def test_synth_pdf_deterministic():

@@ -80,7 +80,6 @@ BNLJ_ALLOWLIST = {
     # combos containing the above as members
     "ann_topk_methods",
     "ann_recall_methods",
-    "page_importance",
     "text_analysis",  # carries dsir_select + lm_perplexity_buckets
 }
 

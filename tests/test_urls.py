@@ -11,7 +11,6 @@ from scrapy_spark.functions.urls import (
     is_image_url,
     sanitize_path,
     url_host,
-    url_pattern,
 )
 
 GOLDEN = [
@@ -88,14 +87,6 @@ def test_sanitize_path():
     assert sanitize_path("/a/./b") == "/a/b"
     assert sanitize_path("") == ""
     assert sanitize_path("/") == "/"
-
-
-def test_url_pattern():
-    assert url_pattern("https://uconn.edu/news/2024/story-55") == "/news/{num}/story-{num}"
-    assert (
-        url_pattern("https://uconn.edu/d/123e4567-e89b-12d3-a456-426614174000")
-        == "/d/{uuid}"
-    )
 
 
 def test_parse_robots_txt():
