@@ -4,7 +4,7 @@ Usage (local sandbox; on a cluster swap --master and add --py-files app.zip):
 
   spark-submit --master local[8] main.py crawl \
       --workdir /tmp/crawl1 --seed 42 --hosts 12 --pages 300 --images 120 \
-      --generations 4 --per-host-budget 10 [--resume] [--bloom]
+      --generations 4 --per-host-budget 10 [--resume]
 
   spark-submit main.py report --workdir /tmp/crawl1
 
@@ -32,14 +32,6 @@ def _add_crawl_args(c: argparse.ArgumentParser) -> None:
     c.add_argument("--gen-cap", type=int, default=10_000)
     c.add_argument("--salt-buckets", type=int, default=8)
     c.add_argument("--resume", action="store_true")
-    c.add_argument("--bloom", action="store_true", help="Bloom-prefiltered dedup")
-    c.add_argument(
-        "--seen-filter",
-        choices=["bloom", "cuckoo"],
-        default=None,
-        help="probabilistic seen-set prefilter tier (cuckoo = deletable; "
-        "decision-neutral either way — overrides --bloom)",
-    )
     c.add_argument(
         "--rate-control",
         action="store_true",
@@ -372,9 +364,7 @@ def _build_parser() -> argparse.ArgumentParser:
     pg = sub.add_parser(
         "purge",
         help="evict one host's URLs from the seen set (forced re-crawl "
-        "cohort): Iceberg-style overwrite snapshot of url_seen plus a "
-        "cuckoo-filter DELETE delta when that tier is active (Bloom "
-        "cannot delete; its stale bits stay harmless false positives)",
+        "cohort): Iceberg-style overwrite snapshot of url_seen",
     )
     pg.add_argument("--workdir", required=True)
     pg.add_argument("--host", required=True, help="host whose URLs re-crawl")
@@ -498,7 +488,6 @@ def main(argv: list[str] | None = None) -> int:
                 params,
                 args.workdir,
                 salt_buckets=args.salt_buckets,
-                use_bloom=args.seen_filter or args.bloom,
                 resolver_factory=resolver_factory,
                 seed_urls=args.seed_url,
                 seed_file=args.seed_file,

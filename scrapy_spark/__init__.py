@@ -5,8 +5,8 @@ BenjaminSRussell/Scrapy UConn crawl pipeline (reference read-only at
 /root/reference/, analysed in SURVEY.md):
 
 - URL frontier as a snapshot-committed table of image+caption candidate URLs
-- exact URL canonicalization -> xxhash64 keys -> partitioned Bloom + exact
-  anti-join URL-seen set (first-writer-wins dedup decisions)
+- exact URL canonicalization -> xxhash64 keys -> exact anti-join URL-seen
+  set, bucketed by hash shard (first-writer-wins dedup decisions)
 - window-ranked per-host frontier selection under robots + politeness budgets
 - vectorized Arrow-UDF fetch + image-metadata/caption extraction
 - per-generation checkpoint/lineage/metrics; kill/resume bit-identical

@@ -587,7 +587,7 @@ def dedup_cuckoo_antijoin(spark, sf_dir):
     the exact anti-join on the same xxhash64 key — hash IS key identity,
     the seen-set's own discipline — so the result equals the oracle's
     plain anti-join while the Spark plan exercises the full shard-cogroup
-    probe (build → merge-shape rows → cogroup check → confirm)."""
+    probe (build per-shard filters → cogroup check → confirm)."""
     from scrapy_spark.operators import cuckoo as cuckoo_ops
 
     e = load(spark, sf_dir, "events")
@@ -4345,7 +4345,7 @@ def _combo_seen_antijoin_sql() -> str:
 def j_seen_antijoin_tiers(spark, sf_dir):
     """COMBO: the D1 seen-set anti-join in both execution tiers — the plain
     exact left_anti (J1) and the cuckoo-filter-prefiltered path (the north
-    rule's deletable tier: operators/cuckoo.py shard-cogroup probe + exact
+    rule's cuckoo tier: operators/cuckoo.py shard-cogroup probe + exact
     confirm), tagged in one result. Different seen/candidate cuts keep the
     members non-degenerate; both reduce to the identical anti-join
     semantics, which is exactly the decision-neutrality claim the cuckoo

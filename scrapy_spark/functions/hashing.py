@@ -10,9 +10,7 @@ it needs a bit-exact Python implementation of the same hash.
 Algorithm: public xxHash64 spec (Yann Collet, BSD),
 https://github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md.
 Spark semantics verified by tests/test_hashing.py against ``F.xxhash64``:
- - StringType  -> XXH64(utf8 bytes, seed=42)
- - LongType    -> XXH64_hashLong(value, seed=42)  (8-byte LE block path)
- - multiple cols -> chained: seed of col N is hash of cols < N
+StringType -> XXH64(utf8 bytes, seed=42).
 """
 
 from __future__ import annotations
@@ -94,11 +92,6 @@ def xxh64(data: bytes, seed: int = SPARK_SEED) -> int:
     return _avalanche(h)
 
 
-def xxh64_long(value: int, seed: int = SPARK_SEED) -> int:
-    """XXH64 of a single signed 64-bit integer, as Spark hashes LongType."""
-    return xxh64(struct.pack("<q", value & _MASK if value >= 0 else value), seed)
-
-
 def to_signed(u: int) -> int:
     """Unsigned 64-bit -> signed (Spark's LongType representation)."""
     return u - (1 << 64) if u >= (1 << 63) else u
@@ -107,8 +100,3 @@ def to_signed(u: int) -> int:
 def spark_xxhash64_str(s: str, seed: int = SPARK_SEED) -> int:
     """Bit-exact equivalent of Spark SQL ``xxhash64(string_col)`` (signed)."""
     return to_signed(xxh64(s.encode("utf-8"), seed))
-
-
-def spark_xxhash64_long(v: int, seed: int = SPARK_SEED) -> int:
-    """Bit-exact equivalent of Spark SQL ``xxhash64(long_col)`` (signed)."""
-    return to_signed(xxh64_long(v, seed))

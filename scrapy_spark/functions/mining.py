@@ -82,8 +82,6 @@ KIND_SOURCE_TYPE = {
     "data_attr": "ajax_endpoint",
 }
 
-MINED_SOURCE_TYPES = tuple(sorted(set(KIND_SOURCE_TYPE.values())))
-
 
 def mined_urls_col(kind: Column, text: Column) -> Column:
     """array<string> of raw mined URLs for one snippet row — pure JVM."""

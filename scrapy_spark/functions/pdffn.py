@@ -91,7 +91,6 @@ def encode_pdf(
 
 
 _TITLE_RE = re.compile(rb"/Title \(((?:\\.|[^\\)])*)\)")
-_AUTHOR_RE = re.compile(rb"/Author \(((?:\\.|[^\\)])*)\)")
 _PAGE_RE = re.compile(rb"/Type /Page[ /]")
 _TJ_RE = re.compile(rb"\(((?:\\.|[^\\)])*)\) Tj")
 _URI_RE = re.compile(rb"/URI \(((?:\\.|[^\\)])*)\)")
@@ -99,11 +98,6 @@ _URI_RE = re.compile(rb"/URI \(((?:\\.|[^\\)])*)\)")
 
 def pdf_title(data: bytes) -> str | None:
     m = _TITLE_RE.search(data)
-    return _unesc(m.group(1).decode("utf-8", "replace")) if m else None
-
-
-def pdf_author(data: bytes) -> str | None:
-    m = _AUTHOR_RE.search(data)
     return _unesc(m.group(1).decode("utf-8", "replace")) if m else None
 
 

@@ -45,9 +45,6 @@ DENY_EXTENSIONS = (
 
 _DENY_RE = re.compile(r"\.(" + "|".join(DENY_EXTENSIONS) + r")$", re.IGNORECASE)
 
-IMAGE_EXTENSIONS = ("jpg", "jpeg", "png", "gif", "webp")
-_IMAGE_RE = re.compile(r"\.(" + "|".join(IMAGE_EXTENSIONS) + r")$", re.IGNORECASE)
-
 
 def sanitize_path(path: str) -> str:
     """Resolve ``.``/``..`` segments, preserving leading/trailing slash.
@@ -189,10 +186,6 @@ def is_allowed_domain(host: str | None, domain: str = "uconn.edu") -> bool:
 
 def is_denied_extension(url: str) -> bool:
     return bool(_DENY_RE.search(url_path(url)))
-
-
-def is_image_url(url: str) -> bool:
-    return bool(_IMAGE_RE.search(url_path(url)))
 
 
 def parse_robots_txt(text: str, user_agent: str = "*") -> list[str]:

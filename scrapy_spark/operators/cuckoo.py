@@ -1,63 +1,38 @@
-"""Partitioned cuckoo-filter URL-seen tier (D1, SURVEY §2.3).
+"""Partitioned cuckoo-filter prefilter for the seen-set anti-join (D1,
+SURVEY §2.3) — the kernel behind the ``dedup_cuckoo_antijoin`` driver query.
 
-The mandated rebuild design (BASELINE.json north rule) names a
-"Bloom+cuckoo URL-seen set". ``operators/dedup.py`` is the Bloom tier;
-this module is the cuckoo tier — same two-tier, same partitioned shape
-(per-shard filter rows staged per generation, executor-side merge at
-read, shard-wise cogroup probe, maybe-rows confirmed by the exact
-anti-join against ``url_seen``), but the per-shard filter is a cuckoo
-filter (Fan et al., "Cuckoo Filter: Practically Better Than Bloom",
-CoNEXT 2014 — public paper): each key stores a 16-bit fingerprint in one
-of two XOR-linked buckets of ``SLOTS`` slots.
-
-What the cuckoo tier buys over Bloom at the 10^10 design point:
-
-- **Deletion** (``delete_hashes``): a Bloom filter cannot evict, so a
-  forced re-crawl cohort (freshness eviction, domain purge) invalidates
-  the whole filter tier; the cuckoo filter removes the stored fingerprint
-  in O(1) per key. Deletes are safe for keys that were actually inserted:
-  inserts use MULTISET semantics (a colliding identical fingerprint is
-  stored again, never skipped), so deleting key A can never un-member a
-  fingerprint-colliding key B — the no-false-negative guarantee the
-  anti-join correctness depends on survives deletion.
-- **Two bucket reads per probe** (2 × ``SLOTS`` contiguous uint16 slots)
-  vs ``K_HASHES`` scattered bit probes — and ~1.2e-4 false-positive rate
-  at 16-bit fingerprints (ε ≈ 2·SLOTS/2^16), an order quieter than the
-  Bloom tier at the same bits/key, so fewer maybe-rows reach the exact
-  join.
+Candidates − seen, prefiltered: one cuckoo filter per hash shard
+(``pmod(url_hash, N_SHARDS)``) built on the executors, a shard-wise cogroup
+probe, and the maybe-rows confirmed by the exact anti-join against the seen
+keys. The per-shard filter is a cuckoo filter (Fan et al., "Cuckoo Filter:
+Practically Better Than Bloom", CoNEXT 2014 — public paper): each key stores
+a 16-bit fingerprint in one of two XOR-linked buckets of ``SLOTS`` slots, so
+a probe reads 2 × ``SLOTS`` contiguous uint16 slots at a ~1.2e-4
+false-positive rate (ε ≈ 2·SLOTS/2^16).
 
 The alternate bucket is ``i2 = i1 XOR remix(fp)`` over a power-of-two
-bucket count — an involution, so an entry can be re-homed knowing only
-its CURRENT bucket and fingerprint. That is what makes the executor-side
-merge of per-generation deltas possible: fold every nonzero
-``(bucket, fp)`` slot of each delta into the merged table without ever
-re-hashing the original keys (mirrors ``merged_bloom_rows``'s OR-merge;
-the driver never holds filter bytes).
+bucket count — an involution, so an entry can be re-homed knowing only its
+CURRENT bucket and fingerprint (the kick-out loop relies on it).
 
-Reference parity: the seen-set SEMANTICS this tier accelerates are the
-reference's atomic add_if_new on a SQLite hash PK
-(``SP/src/common/url_deduplication.py:91-129``); filter-negative rows are
-guaranteed-new (no false negatives), so crawl decisions are bit-identical
-to the exact path — pinned by the cuckoo-mode crawl parity test.
+Reference parity: the seen-set SEMANTICS are the reference's atomic
+add_if_new on a SQLite hash PK (``SP/src/common/url_deduplication.py:91-129``);
+filter-negative rows are guaranteed-new (no false negatives), so the result
+equals the plain anti-join — the ``j_seen_antijoin_tiers`` query pins that.
+The crawl runs the plain anti-join (``frontier.anti_join_seen``) alone: the
+maybe-rows still go through that join, so a prefilter cannot spare its scan.
 
-Sizing at 10^10 URLs: 2^16 shards × 2^16 buckets × 4 slots × 2 B =
-512 KiB/shard (~32 GiB across the cluster, each executor holding only its
-buckets' shards) at ~58% load — comfortably under the ~95% load where
-kick-out insertion starts failing. Here N_BUCKETS=2^12 keeps tests fast;
-the layout is identical. Determinism: per-shard inserts happen in sorted
-url_hash order and merges in generation order, so staged delta bytes are
-bit-stable across re-runs (resume bit-identity discipline).
+Determinism: per-shard inserts happen in sorted url_hash order, so filter
+bytes are bit-stable across re-runs.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.catalog import SnapshotCatalog
-from .dedup import _MIX1, _MIX2, _SPLITMIX, N_SHARDS
+from .frontier import N_SHARDS
 
 N_BUCKETS = 1 << 12  # buckets per shard filter (power of two — XOR involution)
 SLOTS = 4  # fingerprints per bucket
@@ -65,9 +40,13 @@ MAX_KICKS = 500
 
 _BUCKET_MASK = np.uint64(N_BUCKETS - 1)
 
+_SPLITMIX = np.uint64(0x9E3779B97F4A7C15)
+_MIX1 = np.uint64(0xBF58476D1CE4E5B9)
+_MIX2 = np.uint64(0x94D049BB133111EB)
+
 
 def _remix(x: np.ndarray, salt: int) -> np.ndarray:
-    """splitmix64 remix over uint64 arrays (same family as dedup._positions)."""
+    """splitmix64 remix over uint64 arrays."""
     with np.errstate(over="ignore"):
         z = x + np.uint64(salt) * _SPLITMIX
         z = (z ^ (z >> np.uint64(30))) * _MIX1
@@ -131,31 +110,21 @@ def _kick_insert(table: np.ndarray, f: int, b: int) -> None:
             row[empty[0]] = f
             return
     raise ValueError(
-        "cuckoo filter shard full (load too high) — raise N_BUCKETS or "
-        "N_SHARDS; the 10^10 sizing in the module docstring targets ~58% load"
+        "cuckoo filter shard full (load too high) — raise N_BUCKETS or N_SHARDS"
     )
 
 
-def insert_entries(table: np.ndarray, fp: np.ndarray, b: np.ndarray) -> None:
-    """Insert (fingerprint, current-bucket) entries. ``b`` may be either of
-    the entry's two buckets (the XOR involution re-derives the other) —
-    this is the primitive both fresh inserts and delta merges use.
-    Vectorized empty-slot placement first; the collision tail (rare below
-    ~70% load) goes through the deterministic scalar kick-out loop."""
-    placed = _bulk_place(table, fp, b)
-    rem = np.flatnonzero(~placed)
+def insert_hashes(table: np.ndarray, hashes: np.ndarray) -> None:
+    """Insert xxhash64 keys (sorted internally for bit-stable layout).
+    Vectorized empty-slot placement in either bucket first; the collision
+    tail (rare below ~70% load) goes through the deterministic scalar
+    kick-out loop."""
+    fp, b, alt = _fingerprints(np.sort(hashes.astype(np.int64)))
+    rem = np.flatnonzero(~_bulk_place(table, fp, b))
     if rem.size:
-        alt = (b[rem] ^ _alt_offset(fp[rem])).astype(np.int64)
-        placed2 = _bulk_place(table, fp[rem], alt)
+        placed2 = _bulk_place(table, fp[rem], alt[rem])
         for j in np.flatnonzero(~placed2):
             _kick_insert(table, int(fp[rem[j]]), int(b[rem[j]]))
-
-
-def insert_hashes(table: np.ndarray, hashes: np.ndarray) -> None:
-    """Insert xxhash64 keys (sorted internally for bit-stable layout)."""
-    h = np.sort(hashes.astype(np.int64))
-    fp, i1, _ = _fingerprints(h)
-    insert_entries(table, fp, i1)
 
 
 def check_hashes(table: np.ndarray, hashes: np.ndarray) -> np.ndarray:
@@ -166,56 +135,17 @@ def check_hashes(table: np.ndarray, hashes: np.ndarray) -> np.ndarray:
     )
 
 
-def delete_entries(table: np.ndarray, fp: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Remove one stored copy per (fingerprint, bucket) entry — searching
-    the given bucket first, then its XOR alternate (an inserted entry is
-    always in one of the two). The (fp, b) form is what delta MERGES use:
-    a delete delta's entries are re-playable without the original keys."""
-    alt = (b ^ _alt_offset(fp)).astype(np.int64)
-    removed = np.zeros(len(fp), dtype=bool)
-    for j in range(len(fp)):
-        for bb in (int(b[j]), int(alt[j])):
-            row = table[bb]
-            hit = np.flatnonzero(row == fp[j])
-            if hit.size:
-                row[hit[0]] = 0
-                removed[j] = True
-                break
-    return removed
-
-
-def delete_hashes(table: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-    """Remove one stored copy of each key's fingerprint (first matching slot
-    of i1, then i2). Returns a removed mask. Only keys that were inserted
-    may be deleted (standard cuckoo-filter contract); multiset inserts make
-    that sufficient for the no-false-negative guarantee on remaining keys."""
-    fp, i1, _ = _fingerprints(hashes.astype(np.int64))
-    return delete_entries(table, fp, i1)
-
-
-def build_cuckoo_rows(
-    keys: DataFrame, n_shards: int = N_SHARDS, generation: int = 0, op: str = "add"
-) -> DataFrame:
-    """(url_hash) keys -> one (shard, generation, op, tbl) filter row per
-    shard, built ON THE EXECUTORS (groupBy(shard).applyInPandas; the driver
-    never holds filter bytes — merged_bloom_rows discipline). ``op`` is
-    "add" (insert delta) or "del" (eviction delta: the blob's entries are
-    the fingerprints the merge must REMOVE — "add" < "del" lexicographically,
-    so same-generation adds always merge first)."""
-    assert op in ("add", "del"), op
+def build_cuckoo_rows(keys: DataFrame, n_shards: int = N_SHARDS) -> DataFrame:
+    """(url_hash) keys -> one (shard, tbl) filter row per shard, built ON THE
+    EXECUTORS (groupBy(shard).applyInPandas; the driver never holds filter
+    bytes). No repartition(n_shards): groupBy already hash-shuffles by
+    shard, and task count must never be coupled to shard count."""
 
     def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         table = new_table()
         insert_hashes(table, pdf["url_hash"].to_numpy(np.int64))
         return pd.DataFrame(
-            [
-                {
-                    "shard": int(pdf["shard"].iloc[0]),
-                    "generation": generation,
-                    "op": op,
-                    "tbl": table.tobytes(),
-                }
-            ]
+            [{"shard": int(pdf["shard"].iloc[0]), "tbl": table.tobytes()}]
         )
 
     return (
@@ -223,80 +153,8 @@ def build_cuckoo_rows(
             "url_hash", F.pmod(F.col("url_hash"), F.lit(n_shards)).alias("shard")
         )
         .groupBy("shard")
-        .applyInPandas(
-            per_shard, schema="shard int, generation int, op string, tbl binary"
-        )
+        .applyInPandas(per_shard, schema="shard int, tbl binary")
     )
-
-
-def stage_cuckoo_delta(
-    spark: SparkSession,
-    catalog: SnapshotCatalog,
-    selected: DataFrame,
-    gen: int,
-    n_shards: int = N_SHARDS,
-) -> list[str]:
-    """Build per-shard cuckoo rows for this generation's newly-seen keys
-    (the stage_bloom_delta twin; committed under table name ``cuckoo``)."""
-    return catalog.stage(
-        build_cuckoo_rows(selected, n_shards, generation=gen), "cuckoo", gen
-    )
-
-
-def stage_cuckoo_delete_delta(
-    spark: SparkSession,
-    catalog: SnapshotCatalog,
-    evicted: DataFrame,
-    gen: int,
-    n_shards: int = N_SHARDS,
-) -> list[str]:
-    """Eviction delta for purged seen keys — what the Bloom tier cannot do
-    at all. The merge removes exactly one stored copy per evicted key, so
-    remaining keys keep the no-false-negative guarantee (multiset inserts)
-    and purged keys turn (near-always) filter-negative instead of rotting
-    as permanent false positives."""
-    return catalog.stage(
-        build_cuckoo_rows(evicted, n_shards, generation=gen, op="del"),
-        "cuckoo",
-        gen,
-    )
-
-
-def merged_cuckoo_rows(
-    spark: SparkSession, catalog: SnapshotCatalog, n_shards: int = N_SHARDS
-) -> DataFrame | None:
-    """Fold per-generation shard deltas into one (shard, tbl) row per shard,
-    merged ON THE EXECUTORS. Unlike Bloom's commutative OR, cuckoo merge
-    re-inserts each delta's nonzero (bucket, fp) slots — possible without
-    the original keys because the alternate bucket is derivable from
-    (bucket, fp) alone — in generation order for determinism."""
-    df = catalog.read(spark, "cuckoo")
-    if df is None:
-        return None
-    if "op" not in df.columns:  # pre-delete-delta cuckoo tables: all adds
-        df = df.withColumn("op", F.lit("add"))
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        table = new_table()
-        # (generation, op) order: adds of a generation before its dels;
-        # dels commute among themselves and adds preserve membership
-        # regardless of layout, so this order fully determines membership
-        for row in pdf.sort_values(["generation", "op"]).itertuples(index=False):
-            t = np.frombuffer(row.tbl, dtype=np.uint16).reshape(N_BUCKETS, SLOTS)
-            bidx, sidx = np.nonzero(t)
-            fps = t[bidx, sidx]
-            if row.op == "del":
-                delete_entries(table, fps, bidx.astype(np.int64))
-            else:
-                insert_entries(table, fps, bidx.astype(np.int64))
-        return pd.DataFrame(
-            [{"shard": int(pdf["shard"].iloc[0]), "tbl": table.tobytes()}]
-        )
-
-    # no repartition(n_shards): groupBy already hash-shuffles by shard, and
-    # task count must never be coupled to shard count (CLAUDE.md invariant;
-    # measured 262s -> 5.9s on the 2^16-shard Bloom equivalence test)
-    return df.groupBy("shard").applyInPandas(merge, schema="shard int, tbl binary")
 
 
 def cuckoo_prefilter_anti_join(
@@ -323,7 +181,7 @@ def cuckoo_prefilter_anti_join(
             return cand_pdf.assign(_maybe=False)  # no filter -> definitely new
         maybe = np.zeros(len(cand_pdf), dtype=bool)
         h = cand_pdf["url_hash"].to_numpy(np.int64)
-        for blob in flt_pdf["tbl"]:  # one row per shard post-merge; OR anyway
+        for blob in flt_pdf["tbl"]:  # one filter row per shard
             t = np.frombuffer(blob, dtype=np.uint16).reshape(N_BUCKETS, SLOTS)
             maybe |= check_hashes(t, h)
         return cand_pdf.assign(_maybe=maybe)
@@ -343,16 +201,3 @@ def cuckoo_prefilter_anti_join(
         .join(seen.select("url_hash"), "url_hash", "left_anti")
     )
     return definite_new.select(cols).unionByName(maybe.select(cols))
-
-
-def cuckoo_anti_join(
-    spark: SparkSession,
-    cands: DataFrame,
-    seen: DataFrame,
-    catalog: SnapshotCatalog,
-    n_shards: int = N_SHARDS,
-) -> DataFrame:
-    """Catalog-backed form used by CrawlJob (bloom_anti_join twin)."""
-    return cuckoo_prefilter_anti_join(
-        cands, seen, merged_cuckoo_rows(spark, catalog, n_shards), n_shards
-    )

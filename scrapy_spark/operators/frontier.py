@@ -14,7 +14,7 @@ Spark-first mapping of the reference's per-candidate processing chain
   first-writer tie-break (depth, -score, source_url, source_type) —
   order-independent, so the parallel result equals sequential insertion
 - cross-generation dedup (D1) is a left_anti join against url_seen on
-  url_hash (bucketable at scale; Bloom prefilter in operators/dedup.py)
+  url_hash (bucketable at scale by the committed ``shard`` column)
 - frontier selection (W1) is rank-and-take per host under the politeness
   budget, with the 10k-queue backpressure cap (pipeline.py:36) as a global
   re-ranked limit
@@ -29,6 +29,10 @@ from pyspark.sql import types as T
 from ..functions.scoring import spark_score
 from ..functions.urls import DENY_EXTENSIONS, canonicalize, clean_seed_url
 from .topk import topk_total_order
+
+# url_seen.shard = pmod(url_hash, N_SHARDS): the committed bucket column of the
+# seen set (part of the on-disk layout — changing it changes committed bytes)
+N_SHARDS = 64
 
 # Arrow-vectorized canonicalization (one Python invocation per ~10k-row batch;
 # DataType objects, not DDL strings, so import needs no active session).
@@ -274,8 +278,10 @@ def anti_join_seen(cands: DataFrame, seen: DataFrame | None) -> DataFrame:
     """Cross-generation dedup: candidates − url_seen (D1/SO2).
 
     At 10^10 scale this is a bucketed storage-partition join on
-    bucket(url_hash, N); Bloom prefilter (operators/dedup.py) cuts the probe
-    side first. At test scale Catalyst/AQE picks the strategy.
+    bucket(url_hash, N). At test scale Catalyst/AQE picks the strategy.
+    Probabilistic prefilters in front of it (Bloom, cuckoo) were measured
+    slower on every crawl shape: they still send their maybe-rows through
+    this same join, so they scan and shuffle the whole url_seen anyway.
     """
     if seen is None:
         return cands

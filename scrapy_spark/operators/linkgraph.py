@@ -127,19 +127,6 @@ def _materialize_edges(edges: DataFrame, materialize: bool) -> DataFrame:
     return _cut(edges, name="edges") if materialize else edges
 
 
-def degree_stats(edges: DataFrame, materialize: bool = True) -> DataFrame:
-    """In/out degree per node (A8)."""
-    edges = _materialize_edges(edges, materialize)
-    out_d = edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("out_degree"))
-    in_d = edges.groupBy(F.col("dst").alias("node")).agg(F.count("*").alias("in_degree"))
-    return (
-        nodes_of(edges)
-        .join(out_d, "node", "left")
-        .join(in_d, "node", "left")
-        .fillna(0, ["out_degree", "in_degree"])
-    )
-
-
 PR_SCALE = 1_000_000  # rank unit: micros of n x rank (mass-scaled)
 HITS_SCALE = 1_000  # millis; norm sums must fit bigint (see hits_exact)
 

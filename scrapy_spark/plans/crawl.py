@@ -27,13 +27,12 @@ from pyspark.sql import functions as F
 
 from . import purge as purge_mod
 from ..operators import adaptive as adaptive_ops
-from ..operators import cuckoo as cuckoo_ops
-from ..operators import dedup as dedup_ops
 from ..operators import pagination as pagination_ops
 from ..operators import validation as validation_ops
 from ..operators.extract import extract_candidates
 from ..operators.fetch import fetch_frontier
 from ..operators.frontier import (
+    N_SHARDS,
     anti_join_seen,
     apply_learned_filters,
     apply_robots,
@@ -108,12 +107,6 @@ class CrawlJob:
         params: CrawlParams,
         workdir: str,
         salt_buckets: int = 8,
-        # False = exact anti-join only; True/"bloom" = Bloom-prefiltered
-        # (operators/dedup.py); "cuckoo" = cuckoo-filter-prefiltered
-        # (operators/cuckoo.py — deletable seen tier). Either prefilter is
-        # decision-neutral: negatives are guaranteed-new, maybes confirm
-        # exactly, so crawl output is bit-identical across all three.
-        use_bloom: bool | str = False,
         politeness_delay_s: float = 0.0,
         fetch_latency_s: float = 0.0,
         fetch_partitions: int | None = None,
@@ -126,7 +119,6 @@ class CrawlJob:
         self.params = params
         self.catalog = SnapshotCatalog(workdir)
         self.salt_buckets = salt_buckets
-        self.use_bloom = use_bloom
         self.politeness_delay_s = politeness_delay_s
         self.fetch_latency_s = fetch_latency_s
         self.fetch_partitions = fetch_partitions
@@ -216,11 +208,15 @@ class CrawlJob:
             # per-generation; every generation's results are committed to
             # the catalog before the next starts, so at run end (or abort)
             # no live plan reads them — reclaim so a configured staging dir
-            # doesn't grow for the life of the application
+            # doesn't grow for the life of the application; the robots frame
+            # is cached for one run only
             from scrapy_spark.plans.materialize import clear_staging
 
+            robots, self._robots = self._robots, None
             try:
                 clear_staging(self.spark)
+                if robots is not None:
+                    robots.unpersist()
             except Exception:
                 # cleanup must not replace the crawl's own failure (a dead
                 # SparkContext makes conf/_jvm access raise here too)
@@ -401,13 +397,7 @@ class CrawlJob:
             # they bypass the anti-join (and never re-enter the seen set)
             reval_c = cands.filter(F.col("source_type") == "revalidate")
             cands = cands.filter(F.col("source_type") != "revalidate")
-        if self.use_bloom and seen is not None:
-            if self.use_bloom == "cuckoo":
-                new = cuckoo_ops.cuckoo_anti_join(spark, cands, seen, self.catalog)
-            else:
-                new = dedup_ops.bloom_anti_join(spark, cands, seen, self.catalog)
-        else:
-            new = anti_join_seen(cands, seen)
+        new = anti_join_seen(cands, seen)
         if params.revalidate:
             new = new.unionByName(reval_c)
 
@@ -517,7 +507,7 @@ class CrawlJob:
                 "url",
                 "host",
                 F.lit(gen).alias("generation"),
-                F.pmod(F.col("url_hash"), F.lit(dedup_ops.N_SHARDS)).alias("shard"),
+                F.pmod(F.col("url_hash"), F.lit(N_SHARDS)).alias("shard"),
             )
             # per-partition lineage: (generation, host_shard=host, stage counts);
             # staged as a DataFrame write — NEVER collected. At the 10^10 design
@@ -657,19 +647,6 @@ class CrawlJob:
                     )
                 raise ValidationGateError(msg)
 
-            if self.use_bloom:
-                newly_seen = slim.filter(
-                    ~transient & (F.col("source_type") != "revalidate")
-                )
-                if self.use_bloom == "cuckoo":
-                    staged["cuckoo"] = cuckoo_ops.stage_cuckoo_delta(
-                        spark, self.catalog, newly_seen, gen
-                    )
-                else:
-                    staged["bloom"] = dedup_ops.stage_bloom_delta(
-                        spark, self.catalog, newly_seen, gen
-                    )
-
             # alert records (alerts.py:37-181 AlertManager), committed ATOMICALLY
             # with the generation: generation_complete, schema-degradation
             # warnings, breaker openings. Deterministic columns only (no wall
@@ -686,8 +663,6 @@ class CrawlJob:
             if params.rate_control:
                 # the staged host_budget delta is one row per active host — a
                 # pyarrow footer-sized read, no extra Spark job per generation
-                # (the DataFrame form alerts.breaker_alert_rows exists for
-                # cluster runs where the delta shouldn't visit the driver)
                 brows = self.catalog.staged_read(
                     staged["host_budget"], columns=["host", "consec", "state"]
                 )
@@ -725,9 +700,9 @@ class CrawlJob:
                 gen, staged, stats={"generation": gen, "scheduled": n_sel}
             )
         finally:
-            # every exit — gate failure, a failed pooled stage() future, a
-            # bloom/cuckoo update or commit error — releases the cached
-            # projection; nothing below the commit reads it
+            # every exit — gate failure, a failed pooled stage() future or a
+            # commit error — releases the cached projection; nothing below
+            # the commit reads it
             slim.unpersist()
 
         # adaptive_stats retention (round-6 verdict #2): on a fixed,

@@ -83,9 +83,8 @@ class CrawlParams:
     freshness_max_age_days: int = 30
     revalidate_after_gens: int = 2
     # seen-set eviction (plans/purge.py): after generation g commits, evict
-    # host H's URLs from url_seen (and the cuckoo filter tier, when active)
-    # so they re-fetch on re-discovery; (g, H) — the oracle twin applies the
-    # same eviction at its generation-g loop tail
+    # host H's URLs from url_seen so they re-fetch on re-discovery; (g, H) —
+    # the oracle twin applies the same eviction at its generation-g loop tail
     purge_after: tuple[int, str] | None = None
     # per-host AIMD rate control + circuit breaker
     # (retry_strategies.py:256-390 DomainCircuitBreaker;

@@ -3,19 +3,9 @@
 The reference can only re-crawl a URL by deleting its SQLite seen row
 (``SP/src/common/url_deduplication.py`` is a plain hash-PK table, so row
 deletes are cheap there); at the 10^10 rebuild scale the seen set is a
-snapshot-committed table plus a probabilistic prefilter tier, so eviction
-becomes two coordinated actions:
-
-1. **Rewrite url_seen without the cohort** — an Iceberg-style overwrite
-   snapshot (``SnapshotCatalog.commit_rewrite``): atomic, resume
-   numbering untouched, old files orphaned until vacuum.
-2. **Update the filter tier.** The cuckoo tier stages a DELETE delta
-   (``stage_cuckoo_delete_delta``) so purged keys turn filter-negative
-   again — the capability the north rule's "bloom/cuckoo" pairing buys.
-   A Bloom tier cannot delete; its stale bits degrade to harmless false
-   positives that the exact anti-join re-confirms against the rewritten
-   url_seen, so purge stays DECISION-CORRECT under every filter mode —
-   cuckoo just keeps the filter tight.
+snapshot-committed table, so eviction is an Iceberg-style overwrite
+snapshot of url_seen without the cohort (``SnapshotCatalog.commit_rewrite``):
+atomic, resume numbering untouched, old files orphaned until vacuum.
 
 After a purge, the cohort's URLs are re-fetched when next re-discovered
 (link extraction, sitemaps, pagination guesses) — the sequential oracle
@@ -27,22 +17,19 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import cuckoo as cuckoo_ops
 from ..sources.catalog import SnapshotCatalog
 
 
 def purge_host(spark: SparkSession, catalog: SnapshotCatalog, host: str) -> int:
     """Evict every seen URL of ``host``; returns the cohort size.
 
-    At 10^10 scale both sides stay distributed: the rewrite is a
-    column-pruned scan+filter of url_seen (no bytes anywhere near this
-    table) and the delete delta is the same per-shard applyInPandas shape
-    as the add path. The cohort count comes from the staged files'
-    parquet footers, not a collect."""
+    At 10^10 scale the rewrite stays distributed: a scan+filter of
+    url_seen staged straight back to files (no bytes anywhere near the
+    driver). The cohort count comes from the staged files' parquet
+    footers, not a collect."""
     seen = catalog.read(spark, "url_seen")
     if seen is None:
         return 0
-    evicted = seen.filter(F.col("host") == host)
     keep = seen.filter(F.col("host") != host)
     gen = max(catalog.committed_generation(), 0)
     # stage everything BEFORE the manifest swap — the lazy plans read the
@@ -53,14 +40,8 @@ def purge_host(spark: SparkSession, catalog: SnapshotCatalog, host: str) -> int:
     n = before - catalog.staged_rows(keep_files)
     if n == 0:
         return 0  # nothing to purge; staged copy becomes a vacuumable orphan
-    appended: dict[str, list[str]] = {}
-    if catalog.read(spark, "cuckoo") is not None:
-        appended["cuckoo"] = cuckoo_ops.stage_cuckoo_delete_delta(
-            spark, catalog, evicted, gen
-        )
     catalog.commit_rewrite(
         {"url_seen": keep_files},
-        appended,
         stats={"op": "purge_host", "host": host, "evicted": n},
     )
     return n

@@ -25,18 +25,10 @@ import json
 import os
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 ALERTS_JSONL = "alerts.jsonl"
 
 # alerts.py:132 severity ladder
 SEVERITY_LEVELS = {"info": 0, "warning": 1, "error": 2, "critical": 3}
-
-ALERT_SCHEMA = (
-    "generation int, severity string, event string, stage string, "
-    "host string, message string"
-)
 
 
 def meets_threshold(severity: str, threshold: str) -> bool:
@@ -44,29 +36,11 @@ def meets_threshold(severity: str, threshold: str) -> bool:
     return SEVERITY_LEVELS.get(severity, 0) >= SEVERITY_LEVELS.get(threshold, 2)
 
 
-def breaker_alert_rows(budget_rows: DataFrame, gen: int) -> DataFrame:
-    """Circuit-breaker openings → warning rows (Spark form, for callers that
-    hold the delta as a DataFrame — e.g. a million-host cluster run where
-    the delta should not visit the driver)."""
-    return budget_rows.filter(F.col("state") == "open").select(
-        F.lit(gen).alias("generation"),
-        F.lit("warning").alias("severity"),
-        F.lit("breaker_open").alias("event"),
-        F.lit("rate_control").alias("stage"),
-        F.col("host"),
-        F.concat(
-            F.lit("circuit opened after "),
-            F.col("consec").cast("string"),
-            F.lit(" consecutive failures; budget 0 for one generation"),
-        ).alias("message"),
-    )
-
-
 def py_breaker_alert_rows(budget_rows: list[dict], gen: int) -> list[dict]:
-    """Twin of :func:`breaker_alert_rows` over the staged host_budget delta
-    read driver-side (CrawlJob reads the per-generation rollup via pyarrow —
-    one row per active host — to avoid a per-generation Spark job).
-    Host-sorted for a deterministic table order."""
+    """Circuit-breaker openings → warning rows, over the staged host_budget
+    delta read driver-side (CrawlJob reads the per-generation rollup via
+    pyarrow — one row per active host — to avoid a per-generation Spark
+    job). Host-sorted for a deterministic table order."""
     out = []
     for r in sorted(budget_rows, key=lambda r: r["host"]):
         if r["state"] != "open":
@@ -128,11 +102,3 @@ def append_jsonl(workdir: str, severity: str, event: str, message: str,
         rec["metadata"] = metadata
     with open(os.path.join(workdir, ALERTS_JSONL), "a", encoding="utf-8") as fh:
         fh.write(json.dumps(rec, ensure_ascii=False) + "\n")
-
-
-def read_jsonl(workdir: str) -> list[dict]:
-    path = os.path.join(workdir, ALERTS_JSONL)
-    if not os.path.exists(path):
-        return []
-    with open(path, encoding="utf-8") as fh:
-        return [json.loads(line) for line in fh if line.strip()]

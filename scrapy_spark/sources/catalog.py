@@ -12,8 +12,8 @@ JSON manifest:
   tables touched by a generation become visible together, so a killed run
   resumes from the last committed generation bit-identically (the reference's
   BatchCheckpoint/EnhancedCheckpoint role, checkpoints.py:16-213).
-- **table layout**: append-only file lists per table; `bucket_by` metadata is
-  recorded so readers know the layout (the cuckoo-style bucketed url_seen).
+- **table layout**: append-only file lists per table; url_seen carries its
+  hash bucket as a ``shard`` column (``pmod(url_hash, 64)``).
 
 On a real cluster this class is replaced 1:1 by an Iceberg catalog
 (``df.writeTo(tbl).append()`` inside a single transaction); the crawl driver
@@ -190,25 +190,21 @@ class SnapshotCatalog:
     def commit_rewrite(
         self,
         rewritten: dict[str, list[str]],
-        appended: dict[str, list[str]] | None = None,
         stats: dict | None = None,
     ) -> None:
         """Overwrite snapshot (the Iceberg overwrite-commit analog, for
         maintenance ops like seen-set purges): atomically REPLACE the full
-        file list of each table in ``rewritten`` and append ``appended``
-        tables, WITHOUT advancing committed_generation — crawl resume
-        numbering is untouched, and the snapshot entry records the op in
-        its stats. Replaced files stay on disk as orphans until
-        :meth:`vacuum` (readers holding the old manifest keep working —
-        snapshot isolation). NB :meth:`read_upto` time-travel keys on the
+        file list of each table in ``rewritten``, WITHOUT advancing
+        committed_generation — crawl resume numbering is untouched, and the
+        snapshot entry records the op in its stats. Replaced files stay on
+        disk as orphans until :meth:`vacuum` (readers holding the old
+        manifest keep working — snapshot isolation). NB :meth:`read_upto` time-travel keys on the
         filename generation prefix, not the snapshot id, so it sees
         rewritten content for all generations — same caveat as Iceberg
         overwrite vs pre-overwrite snapshot ids."""
         m = self._load()
         for table, files in rewritten.items():
             m["tables"][table] = files
-        for table, files in (appended or {}).items():
-            m["tables"].setdefault(table, []).extend(files)
         m["snapshots"].append(
             {"generation": m["committed_generation"], "stats": stats or {}}
         )

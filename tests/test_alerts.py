@@ -4,6 +4,9 @@ txn-aborting events, the severity threshold gate, and the Prometheus export."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +16,14 @@ from scrapy_spark.sources import alerts as alerts_mod
 from scrapy_spark.sources.synth import SynthConfig
 
 CFG = SynthConfig(seed=42, n_hosts=4, n_pages=60, n_images=20, n_seeds=4)
+
+
+def read_jsonl(workdir: str) -> list[dict]:
+    path = os.path.join(workdir, alerts_mod.ALERTS_JSONL)
+    if not os.path.exists(path):
+        return []
+    with open(path, encoding="utf-8") as fh:
+        return [json.loads(line) for line in fh if line.strip()]
 
 
 def test_meets_threshold_ladder():
@@ -40,7 +51,7 @@ def test_healthy_crawl_alert_records(spark, tmp_path):
         assert gc[s.generation]["severity"] == "info"
     assert not [r for r in rows if r["event"] == "breaker_open"]  # rc off
     # file channel: pipeline_complete fires after the final commit
-    recs = alerts_mod.read_jsonl(wd)
+    recs = read_jsonl(wd)
     pc = [r for r in recs if r["event"] == "pipeline_complete"]
     assert len(pc) == 1 and pc[0]["severity"] == "info"
     assert pc[0]["metadata"]["scheduled"] == sum(s.scheduled for s in stats)
@@ -90,7 +101,7 @@ def test_validation_gate_stage_failed(spark, tmp_path, monkeypatch):
     with pytest.raises(ValidationGateError):
         job.run()
     assert job.catalog.committed_generation() == -1
-    recs = alerts_mod.read_jsonl(wd)
+    recs = read_jsonl(wd)
     sf = [r for r in recs if r["event"] == "stage_failed"]
     assert len(sf) == 1 and sf[0]["severity"] == "error"
     assert sf[0]["stage"] == "interstage_validation"
@@ -100,10 +111,9 @@ def test_validation_gate_stage_failed(spark, tmp_path, monkeypatch):
 
 def test_failed_generation_releases_cached_projection(spark, tmp_path):
     """A generation that dies in a pooled rollup (here the lineage stage)
-    must not leak the cached per-generation projection: the session's
-    persistent-RDD count is back to its pre-generation value after the
-    raise. The job-lifetime robots cache is materialized before the
-    baseline is read, so only per-generation caches are counted."""
+    must not leak a cached frame — neither the per-generation projection
+    nor the run's robots table: the session's persistent-RDD count is back
+    to its pre-run value after the raise."""
     wd = str(tmp_path / "wd")
     job = CrawlJob(
         spark, CFG, CrawlParams(max_generations=1, per_host_budget=8), wd,
@@ -117,7 +127,6 @@ def test_failed_generation_releases_cached_projection(spark, tmp_path):
         return stage(df, table, *a, **k)
 
     job.catalog.stage = failing_stage
-    job.robots_df().count()
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     before = persisted().size()
     with pytest.raises(RuntimeError, match="injected lineage"):
@@ -141,6 +150,6 @@ def test_alert_threshold_gates_file_channel(spark, tmp_path):
         salt_buckets=2,
     )
     job.run()
-    assert alerts_mod.read_jsonl(wd) == []
+    assert read_jsonl(wd) == []
     rows = job.catalog.read(spark, "alerts").collect()
     assert any(r["event"] == "generation_complete" for r in rows)

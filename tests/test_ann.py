@@ -7,6 +7,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
+from scrapy_spark import entry_queries as eq
 from scrapy_spark.operators.ann import brute_force_topk, lsh_recall, lsh_topk
 from scrapy_spark.operators.neardup import ngram_jaccard_pairs
 
@@ -14,10 +15,8 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def _vecs(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: F.round(x * 1000).cast("long")).alias("q"),
-    )
+    """The production quantizer (float32 multiply, as the DuckDB oracle)."""
+    return eq._spark_quantized(spark, SF_DIR).select("vec_id", "q")
 
 
 def test_lsh_recall_tradeoff(spark):
@@ -421,8 +420,6 @@ def test_quantized_embeddings_match_duckdb_at_half_boundaries(spark):
     (-52.4999... -> -52). Feeds every ann_* / embed_* query."""
     import duckdb
     import pyarrow as pa
-
-    import scrapy_spark.entry_queries as eq
 
     vals = [-0.0525, 0.1235, 0.0005, -0.3335]
     arrow = pa.table(

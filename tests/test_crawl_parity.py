@@ -189,25 +189,6 @@ def test_lineage_counts(oracle, spark_run):
     assert per_gen == oracle_per_gen
 
 
-def test_bloom_path_equivalent(spark, oracle, tmp_path_factory):
-    """Bloom-prefiltered dedup must yield identical decisions to exact-only."""
-    wd = str(tmp_path_factory.mktemp("crawl_bloom"))
-    job = CrawlJob(spark, CFG, PARAMS, wd, salt_buckets=4, use_bloom=True)
-    job.run()
-    seen = {(r["url"], r["generation"]) for r in job.catalog.read(spark, "url_seen").collect()}
-    assert seen == {(u, g) for u, g in oracle.seen.items()}
-
-
-def test_cuckoo_path_equivalent(spark, oracle, tmp_path_factory):
-    """Cuckoo-filter-prefiltered dedup (the north rule's deletable seen
-    tier, operators/cuckoo.py) must yield identical decisions too."""
-    wd = str(tmp_path_factory.mktemp("crawl_cuckoo"))
-    job = CrawlJob(spark, CFG, PARAMS, wd, salt_buckets=4, use_bloom="cuckoo")
-    job.run()
-    seen = {(r["url"], r["generation"]) for r in job.catalog.read(spark, "url_seen").collect()}
-    assert seen == {(u, g) for u, g in oracle.seen.items()}
-
-
 def test_resume_bit_identical(spark, oracle, tmp_path_factory):
     """Kill after generation 1, resume, final tables bit-identical (M4)."""
     wd = str(tmp_path_factory.mktemp("crawl_resume"))

@@ -1,8 +1,6 @@
-"""Cuckoo-filter URL-seen tier (operators/cuckoo.py): kernel guarantees
-(no false negatives, deterministic layout, multiset-safe deletion),
-shard-wise cogroup probe equivalence to the plain anti-join, and the
-executor-side merge of per-generation deltas — the deletable twin of the
-Bloom tier demanded by the north rule's "bloom/cuckoo URL-seen set"."""
+"""Cuckoo-filter prefilter (operators/cuckoo.py, the dedup_cuckoo_antijoin
+kernel): kernel guarantees (no false negatives, deterministic layout) and
+shard-wise cogroup probe equivalence to the plain anti-join."""
 
 from __future__ import annotations
 
@@ -14,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from scrapy_spark.operators import cuckoo
-from scrapy_spark.sources.catalog import SnapshotCatalog
 
 N_SHARDS = 256
 
@@ -47,39 +44,6 @@ def test_deterministic_table_bytes():
     assert t1.tobytes() == t2.tobytes()
 
 
-def test_delete_restores_absence_and_keeps_others():
-    t = cuckoo.new_table()
-    a, b = np.unique(_keys(3000)), np.unique(_keys(3000) + 1)
-    b = np.setdiff1d(b, a)
-    cuckoo.insert_hashes(t, a)
-    cuckoo.insert_hashes(t, b)
-    removed = cuckoo.delete_hashes(t, b)
-    assert removed.all()  # every inserted key deletable
-    assert cuckoo.check_hashes(t, a).all()  # survivors: still no false negs
-
-
-def test_fingerprint_collision_multiset_delete_safe():
-    """Two distinct keys sharing (fp, bucket pair) must BOTH be stored, so
-    deleting one never un-members the other (the property Bloom-style
-    skip-if-present would break)."""
-    seen: dict[tuple[int, int], int] = {}
-    pair = None
-    for k in _keys(200000):
-        fp, i1, _ = cuckoo._fingerprints(np.array([k], dtype=np.int64))
-        sig = (int(fp[0]), int(i1[0]))
-        if sig in seen and seen[sig] != int(k):
-            pair = (seen[sig], int(k))
-            break
-        seen[sig] = int(k)
-    assert pair is not None, "no (fp, bucket) collision found in 200k keys"
-    k1, k2 = pair
-    t = cuckoo.new_table()
-    cuckoo.insert_hashes(t, np.array([k1], dtype=np.int64))
-    cuckoo.insert_hashes(t, np.array([k2], dtype=np.int64))
-    cuckoo.delete_hashes(t, np.array([k1], dtype=np.int64))
-    assert cuckoo.check_hashes(t, np.array([k2], dtype=np.int64)).all()
-
-
 def test_insert_raises_when_full():
     t = cuckoo.new_table()
     t[:] = 7  # artificially saturated: every slot occupied
@@ -88,8 +52,8 @@ def test_insert_raises_when_full():
 
 
 def test_no_driver_materialization():
-    """Same discipline as the Bloom tier: the module never collects filter
-    bytes to the driver nor broadcasts them from it."""
+    """The module never collects filter bytes to the driver nor broadcasts
+    them from it."""
     src = inspect.getsource(cuckoo)
     assert ".collect(" not in src
     assert ".broadcast(" not in src
@@ -105,14 +69,11 @@ def _mk(spark, n, offset=0):
     return spark.createDataFrame(pdf).withColumn("url_hash", F.xxhash64("url"))
 
 
-def test_cuckoo_antijoin_equivalence(spark, tmp_path_factory):
-    wd = str(tmp_path_factory.mktemp("cuckoo_eq"))
-    catalog = SnapshotCatalog(wd)
+def test_cuckoo_antijoin_equivalence(spark):
     seen = _mk(spark, 500).cache()
-    staged = cuckoo.stage_cuckoo_delta(spark, catalog, seen, 0, n_shards=N_SHARDS)
-    catalog.commit(0, {"cuckoo": staged, "url_seen": []})
+    rows = cuckoo.build_cuckoo_rows(seen, n_shards=N_SHARDS)
     cands = _mk(spark, 700, offset=200)  # 300 overlap, 400 new
-    got = cuckoo.cuckoo_anti_join(spark, cands, seen, catalog, n_shards=N_SHARDS)
+    got = cuckoo.cuckoo_prefilter_anti_join(cands, seen, rows, n_shards=N_SHARDS)
     want = cands.join(seen.select("url_hash"), "url_hash", "left_anti")
     assert sorted(r["url"] for r in got.collect()) == sorted(
         r["url"] for r in want.collect()
@@ -123,39 +84,10 @@ def test_cuckoo_antijoin_equivalence(spark, tmp_path_factory):
     seen.unpersist()
 
 
-def test_cuckoo_multi_generation_merge(spark, tmp_path_factory):
-    """Deltas staged across generations merge (entry re-insertion via the
-    XOR involution) into a filter equivalent to one built from the union."""
-    wd = str(tmp_path_factory.mktemp("cuckoo_gens"))
-    catalog = SnapshotCatalog(wd)
-    g0, g1 = _mk(spark, 300).cache(), _mk(spark, 300, offset=300).cache()
-    s0 = cuckoo.stage_cuckoo_delta(spark, catalog, g0, 0, n_shards=N_SHARDS)
-    catalog.commit(0, {"cuckoo": s0, "url_seen": []})
-    s1 = cuckoo.stage_cuckoo_delta(spark, catalog, g1, 1, n_shards=N_SHARDS)
-    catalog.commit(1, {"cuckoo": s1})
-    seen = g0.unionByName(g1)
-    cands = _mk(spark, 900)  # 600 overlap, 300 new
-    got = cuckoo.cuckoo_anti_join(spark, cands, seen, catalog, n_shards=N_SHARDS)
-    want = cands.join(seen.select("url_hash"), "url_hash", "left_anti")
-    assert sorted(r["url"] for r in got.collect()) == sorted(
-        r["url"] for r in want.collect()
-    )
-    g0.unpersist()
-    g1.unpersist()
-
-
-def test_cuckoo_negative_shards_pass_through(spark, tmp_path_factory):
-    wd = str(tmp_path_factory.mktemp("cuckoo_empty"))
-    catalog = SnapshotCatalog(wd)
+def test_cuckoo_negative_shards_pass_through(spark):
     one = _mk(spark, 1).cache()
-    catalog.commit(
-        0,
-        {
-            "cuckoo": cuckoo.stage_cuckoo_delta(spark, catalog, one, 0, n_shards=N_SHARDS),
-            "url_seen": [],
-        },
-    )
+    rows = cuckoo.build_cuckoo_rows(one, n_shards=N_SHARDS)
     cands = _mk(spark, 200, offset=1000)
-    got = cuckoo.cuckoo_anti_join(spark, cands, one, catalog, n_shards=N_SHARDS)
+    got = cuckoo.cuckoo_prefilter_anti_join(cands, one, rows, n_shards=N_SHARDS)
     assert got.count() == 200
     one.unpersist()

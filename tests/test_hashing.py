@@ -5,11 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from scrapy_spark.functions.hashing import (
-    spark_xxhash64_long,
-    spark_xxhash64_str,
-    xxh64,
-)
+from scrapy_spark.functions.hashing import spark_xxhash64_str, xxh64
 
 VECTORS = [
     "",
@@ -37,11 +33,3 @@ def test_string_parity_with_spark(spark):
     got = {r["s"]: r["h"] for r in df.select("s", F.xxhash64("s").alias("h")).collect()}
     for s in VECTORS:
         assert got[s] == spark_xxhash64_str(s), s
-
-
-def test_long_parity_with_spark(spark):
-    vals = [0, 1, -1, 42, 2**62, -(2**62), 123456789]
-    df = spark.createDataFrame([(v,) for v in vals], "v: long")
-    got = {r["v"]: r["h"] for r in df.select("v", F.xxhash64("v").alias("h")).collect()}
-    for v in vals:
-        assert got[v] == spark_xxhash64_long(v), v

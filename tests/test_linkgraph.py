@@ -8,7 +8,7 @@ import re
 import numpy as np
 import pytest
 
-from scrapy_spark.operators.linkgraph import degree_stats, hits_exact, pagerank_exact
+from scrapy_spark.operators.linkgraph import hits_exact, pagerank_exact
 
 
 @pytest.fixture(scope="module")
@@ -60,18 +60,6 @@ def _np_hits(edges, iterations=10):
         new_hub /= np.linalg.norm(new_hub) or 1.0
         hub, auth = new_hub, new_auth
     return {v: (hub[idx[v]], auth[idx[v]]) for v in nodes}
-
-
-def test_degree_stats(spark, graph):
-    df, edges = graph
-    got = {r["node"]: (r["out_degree"], r["in_degree"]) for r in degree_stats(df).collect()}
-    outs: dict[str, int] = {}
-    ins: dict[str, int] = {}
-    for s, d in edges:
-        outs[s] = outs.get(s, 0) + 1
-        ins[d] = ins.get(d, 0) + 1
-    for k, (o, i) in got.items():
-        assert o == outs.get(k, 0) and i == ins.get(k, 0)
 
 
 def test_pagerank_exact_tracks_float(spark, graph):

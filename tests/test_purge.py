@@ -1,14 +1,11 @@
 """Seen-set eviction (plans/purge.py): Iceberg-style overwrite snapshot of
-url_seen + cuckoo DELETE delta, oracle-parity of the purge-then-recrawl
-flow, and the resume-after-kill catch-up branch."""
+url_seen, oracle-parity of the purge-then-recrawl flow, and the
+resume-after-kill catch-up branch."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from scrapy_spark.operators import cuckoo
 from scrapy_spark.plans.crawl import CrawlJob
 from scrapy_spark.plans.oracle import CrawlParams, run_oracle
 from scrapy_spark.plans.purge import purge_host
@@ -27,7 +24,7 @@ def oracle():
 @pytest.fixture(scope="module")
 def spark_run(spark, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("crawl_purge"))
-    job = CrawlJob(spark, CFG, PARAMS, wd, salt_buckets=4, use_bloom="cuckoo")
+    job = CrawlJob(spark, CFG, PARAMS, wd, salt_buckets=4)
     job.run()
     return job
 
@@ -60,51 +57,14 @@ def test_purge_schedule_parity(spark, oracle, spark_run):
     assert got == want
 
 
-def test_purge_snapshot_and_filter_state(spark, oracle, spark_run):
-    """The overwrite snapshot is recorded; the merged cuckoo filter reflects
-    the delete delta: every live seen key still maybe (no false negatives),
-    evicted-and-never-refetched keys near-all negative."""
-    cat = spark_run.catalog
-    ops = [s["stats"].get("op") for s in cat.snapshots()]
-    assert "purge_host" in ops
-    merged = {
-        int(r["shard"]): np.frombuffer(r["tbl"], dtype=np.uint16).reshape(
-            cuckoo.N_BUCKETS, cuckoo.SLOTS
-        )
-        for r in cuckoo.merged_cuckoo_rows(spark, cat).collect()
-    }
-    seen_rows = cat.read(spark, "url_seen").select("url_hash", "shard").collect()
-    for r in seen_rows:  # live keys: the no-false-negative guarantee
-        t = merged[int(r["url_hash"]) % cuckoo.N_SHARDS]
-        assert cuckoo.check_hashes(
-            t, np.array([r["url_hash"]], dtype=np.int64)
-        ).all(), r
-    # evicted keys that never re-fetched: hash of purged urls absent from
-    # the live seen set must be (near-always) filter-negative post-delete
-    live_urls = {r2["url"] for r2 in cat.read(spark, "url_seen").select("url").collect()}
-    purged_urls = [
-        r3["url"]
-        for r3 in cat.read(spark, "fetch_results")
-        .filter((F.col("host") == HOST) & (F.col("generation") <= 1))
-        .select("url")
-        .distinct()
-        .collect()
-        if r3["url"] not in live_urls
-    ]
-    if purged_urls:
-        h = (
-            spark.createDataFrame([(u,) for u in purged_urls], "url string")
-            .withColumn("url_hash", F.xxhash64("url"))
-            .collect()
-        )
-        neg = sum(
-            not cuckoo.check_hashes(
-                merged[int(r4["url_hash"]) % cuckoo.N_SHARDS],
-                np.array([r4["url_hash"]], dtype=np.int64),
-            ).any()
-            for r4 in h
-        )
-        assert neg >= len(h) - 1  # FP slack of one
+def test_purge_snapshot_and_filter_state(spark_run):
+    """The purge lands as one overwrite snapshot in the snapshot log, and
+    the seen set is its only state (no filter tier to update)."""
+    snaps = spark_run.catalog.snapshots()
+    purges = [s["stats"] for s in snaps if s["stats"].get("op") == "purge_host"]
+    assert len(purges) == 1
+    assert purges[0]["host"] == HOST and purges[0]["evicted"] > 0
+    assert not {"bloom", "cuckoo"} & set(spark_run.catalog._load()["tables"])
 
 
 def test_purge_idempotent_and_empty(spark, spark_run):
@@ -119,9 +79,9 @@ def test_purge_applies_on_resume_after_kill(spark, tmp_path_factory):
     # phase 1: run generations 0..1 WITHOUT the purge (the simulated kill
     # happened right after gen 1's commit, before the purge ran)
     p1 = CrawlParams(max_generations=2, per_host_budget=10)
-    CrawlJob(spark, CFG, p1, wd, salt_buckets=4, use_bloom="cuckoo").run()
+    CrawlJob(spark, CFG, p1, wd, salt_buckets=4).run()
     # phase 2: resume with the purge param — catch-up branch fires
-    job2 = CrawlJob(spark, CFG, PARAMS, wd, salt_buckets=4, use_bloom="cuckoo")
+    job2 = CrawlJob(spark, CFG, PARAMS, wd, salt_buckets=4)
     job2.run(resume=True)
     oracle = run_oracle(CFG, PARAMS)
     seen = {

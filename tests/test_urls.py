@@ -8,7 +8,6 @@ from scrapy_spark.functions.urls import (
     clean_seed_url,
     is_allowed_domain,
     is_denied_extension,
-    is_image_url,
     sanitize_path,
     url_host,
 )
@@ -77,8 +76,6 @@ def test_domain_and_filters():
     assert not is_allowed_domain("uconn.edu.evil.com")
     assert is_denied_extension("https://uconn.edu/a.pdf")
     assert not is_denied_extension("https://uconn.edu/a.html")
-    assert is_image_url("https://uconn.edu/img/a.PNG")
-    assert not is_image_url("https://uconn.edu/img/a.html")
     assert url_host("HTTPS://Admissions.UConn.edu/x") == "admissions.uconn.edu"
 
 
